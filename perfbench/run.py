@@ -31,7 +31,7 @@ import zipfile
 
 ROOT = os.getcwd()
 HERE = os.path.dirname(os.path.abspath(__file__))
-BUILD = os.path.join(ROOT, os.environ.get("CARGO_TARGET_DIR", ".bench_build"))
+BUILD = os.path.join(ROOT, ".bench_build")
 
 
 def spark_jars():
@@ -201,7 +201,8 @@ def main():
             sys.exit(code)
         args = ["--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
                 "--trace", str(a.trace), "--work", work,
-                "--data", os.path.join(HERE, "data"), "--out", os.path.join(BUILD, "results")]
+                "--data", os.path.join(HERE, "data"), "--out", os.path.join(BUILD, "results"),
+                "--spec", os.path.join(ROOT, "BENCHMARK.json")]
         if a.tables:
             args += ["--tables", os.path.abspath(a.tables)]
         cmd = java_cmd(build_dir, work, "graft.perfbench.Main", args,

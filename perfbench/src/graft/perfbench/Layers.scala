@@ -7,69 +7,11 @@ import scala.jdk.CollectionConverters._
   * benchmark span that issued them (a job property the tracer sets) and
   * to a layer by the action's call-site file; stages by the operator
   * scopes they ran. Every metric is per traced unit (pass, load or
-  * cycle) unless its name says otherwise; a layer a workload does not
-  * exercise reports 0.
+  * cycle) unless its name says otherwise.
   */
 object Layers {
 
   val QueryNames: Seq[String] = RegistryHeavy.Names
-
-  /** (name, unit) of every per-layer metric in `BENCHMARK.json`, in
-    * report order.
-    */
-  val All: Seq[(String, String)] = Seq(
-    "scd.Quality.check_s" -> "s",
-    "scd.Quality.jobs" -> "count",
-    "scd.EmployeeDimJob.driver_gap_s" -> "s",
-    "operators.Scd.task_s" -> "s",
-    "operators.Scd.shuffle_write_mb" -> "MB",
-    "operators.Scd.spill_mb" -> "MB",
-    "operators.ScdIncremental.touched_ratio" -> "ratio",
-    "operators.ScdIncremental.task_s" -> "s",
-    "operators.ScdIncremental.shuffle_write_mb" -> "MB",
-    "sources.CsvSnapshots.read_task_s" -> "s",
-    "sources.CsvSnapshots.input_mb" -> "MB",
-    "sources.CsvSnapshots.write_s" -> "s",
-    "sources.CsvSnapshots.archive_s" -> "s",
-    "sources.ScdStorage.partitions_rewritten" -> "count",
-    "sources.ScdStorage.bytes_rewritten_mb" -> "MB",
-    "sources.ScdStorage.files_per_partition" -> "count",
-    "streaming.start_s" -> "s",
-    "streaming.trigger_s" -> "s",
-    "streaming.add_batch_s" -> "s",
-    "streaming.wal_commit_s" -> "s",
-    "streaming.latest_offset_s" -> "s",
-    "streaming.query_planning_s" -> "s",
-    "streaming.input_rows" -> "rows",
-    "spark.jobs" -> "count",
-    "spark.stages" -> "count",
-    "spark.tasks" -> "count",
-    "spark.job_s" -> "s",
-    "spark.driver_gap_s" -> "s",
-    "spark.gc_s" -> "s",
-    "spark.spill_mb" -> "MB",
-    "spark.shuffle_write_mb" -> "MB",
-    "spark.input_mb" -> "MB",
-    "spark.output_mb" -> "MB",
-    "parallel_speedup" -> "ratio",
-    "trace_overhead" -> "ratio")
-
-  /** Metrics only the workloads outside `BENCHMARK.json` report. */
-  val Registry: Seq[(String, String)] = Seq(
-    "operators.anchor_mb" -> "MB",
-    "operators.anchor_blocks" -> "count") ++
-    QueryNames.flatMap(q => Seq(
-      s"queries.$q.s" -> "s",
-      s"queries.$q.jobs" -> "count",
-      s"queries.$q.shuffle_write_mb" -> "MB"))
-  val Table: Seq[(String, String)] = Seq(
-    "sources.VersionedTable.commit_s" -> "s",
-    "sources.VersionedTable.merge_s" -> "s",
-    "sources.VersionedTable.manifest_hot_ms" -> "ms",
-    "sources.VersionedTable.manifest_cold_ms" -> "ms",
-    "sources.VersionedTable.prune_kept_ratio" -> "ratio",
-    "sources.VersionedTable.files_per_version" -> "count",
-    "sources.VersionedTable.input_mb_per_read" -> "MB")
 
   def add(ctx: Ctx, name: String, v: Double): Unit =
     ctx.layer.getOrElseUpdate(name, scala.collection.mutable.ArrayBuffer.empty) += v
@@ -201,18 +143,12 @@ object Layers {
     put("spark.output_mb", all.map(_.output).sum / 1e6 / units)
   }
 
-  /** Every per-layer metric, 0 where the workload has no such layer. */
-  def metrics(ctx: Ctx, w: Workload): Seq[(String, Double, String)] = {
-    add(ctx, "parallel_speedup", w.parallelSpeedup)
+  /** Every per-layer metric the run measured, as the mean of its
+    * values. Which of them a run reports is `BENCHMARK.json`'s choice.
+    */
+  def metrics(ctx: Ctx, w: Workload): Map[String, Double] = {
+    if (w.parallelSpeedup > 0) add(ctx, "parallel_speedup", w.parallelSpeedup)
     add(ctx, "trace_overhead", if (w.untracedUnitS > 0) w.tracedUnitS / w.untracedUnitS else 0.0)
-    val extra = ctx.workload match {
-      case "registry_heavy" => Registry
-      case "table_mixed" => Table
-      case _ => Nil
-    }
-    (All ++ extra).map { case (n, u) =>
-      val xs = ctx.layer.get(n).map(_.toSeq).getOrElse(Nil)
-      (n, if (xs.isEmpty) 0.0 else xs.sum / xs.length, u)
-    }
+    ctx.layer.map { case (n, xs) => n -> xs.sum / xs.length }.toMap
   }
 }

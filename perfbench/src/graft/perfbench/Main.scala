@@ -92,6 +92,8 @@ object Main {
     Files.createDirectories(work)
     Files.createDirectories(out)
 
+    val spec = Spec.read(Paths.get(arg(args, "--spec").getOrElse(usage())))
+
     val ctx = new Ctx(workload, seed, seconds, trace, work, data, tables, cpus)
     val w: Workload = workload match {
       case "scd_rebuild" => new ScdRebuild(ctx)
@@ -100,18 +102,28 @@ object Main {
       case "registry_heavy" => new RegistryHeavy(ctx)
     }
     Stats.log(s"$workload seed $seed: start")
+    ctx.spark // the session starts before set-up, which it would otherwise dominate
+    Stats.log("session started")
     val result = try w.run() finally ctx.stop()
     Stats.log(s"$workload seed $seed: done, passes ${ctx.samples.passes.map(x => f"$x%.2f").mkString(" ")}")
     val s = ctx.samples
+    val layers = if (trace) Layers.metrics(ctx, w) else Map.empty[String, Double]
+    val endToEnd = Map(
+      "setup_s" -> result.setupS,
+      "run_s" -> Stats.median(s.passes.toSeq),
+      "load_p50_s" -> Stats.median(s.loads.toSeq),
+      "read_p50_ms" -> Stats.median(s.reads.toSeq),
+      "stored_bytes_ratio" -> result.storedBytesRatio,
+      "peak_rss_mb" -> Stats.peakRssMb())
+    // the metrics and units BENCHMARK.json names, in its order
     val metrics =
-      if (trace) Layers.metrics(ctx, w)
-      else Seq(
-        ("setup_s", result.setupS, "s"),
-        ("run_s", Stats.median(s.passes.toSeq), "s"),
-        ("load_p50_s", Stats.median(s.loads.toSeq), "s"),
-        ("read_p50_ms", Stats.median(s.reads.toSeq), "ms"),
-        ("stored_bytes_ratio", result.storedBytesRatio, "ratio"),
-        ("peak_rss_mb", Stats.peakRssMb(), "MB"))
+      if (trace) spec.perLayer.map { case (n, u) =>
+        if (!layers.contains(n)) Stats.log(s"per-layer metric $n: not exercised by this workload, reported as 0")
+        (n, layers.getOrElse(n, 0.0), u)
+      }
+      else spec.endToEnd.map { case (n, u) =>
+        (n, endToEnd.getOrElse(n, sys.error(s"no end-to-end metric $n in this benchmark")), u)
+      }
     val metricJson = metrics.map { case (n, v, u) =>
       s""""$n":{"value":${num(v)},"unit":"$u"}"""
     }.mkString("{", ",", "}")
@@ -133,6 +145,7 @@ object Main {
         s""""read_samples_ms":[${s.reads.map(num).mkString(",")}],""" +
         s""""pass_samples_s":[${s.passes.map(num).mkString(",")}],""" +
         s""""setup_samples_s":[${result.setupSamples.map(num).mkString(",")}],""" +
+        s""""layers":{${layers.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString(",")}},""" +
         s""""detail":{${ctx.detail.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString(",")}},""" +
         s""""metrics":$metricJson}"""
     val stamp = s"$workload-s$seed-t${if (trace) 1 else 0}-${System.currentTimeMillis()}"
@@ -148,8 +161,26 @@ object Main {
 
   private def usage(): Nothing = {
     System.err.println("usage: Main --workload <" + Workloads.mkString("|") +
-      "> --seed <n> --seconds <s> --trace <0|1> --work <dir> --data <dir> --out <dir> [--tables <dir>]")
+      "> --seed <n> --seconds <s> --trace <0|1> --work <dir> --data <dir> --out <dir> " +
+      "--spec <BENCHMARK.json> [--tables <dir>]")
     sys.exit(2)
+  }
+}
+
+/** The metric names and units `BENCHMARK.json` lists: the one place
+  * that says what a run reports.
+  */
+final case class Spec(endToEnd: Seq[(String, String)], perLayer: Seq[(String, String)])
+
+object Spec {
+  def read(path: Path): Spec = {
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Files.readAllBytes(path))
+    def list(key: String): Seq[(String, String)] = {
+      val it = tree.get(key).elements()
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(n => n.get("name").asText -> n.get("unit").asText).toSeq
+    }
+    Spec(list("end_to_end"), list("per_layer"))
   }
 }
 

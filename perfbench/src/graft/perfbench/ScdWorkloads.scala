@@ -11,10 +11,14 @@ object ScdSizes {
   val RebuildEmployees = 5000
   val RebuildDays = 8
   val DailyEmployees = 5000
-  val DailyBootstrapDays = 4
+  val DailyBootstrapDays = 8
+  /** Bootstrap days held back to be delivered late, one per load cycle;
+    * so also the most cycles a run makes.
+    */
+  val DailyHeldBack = 4
+  val DailyNewDays = 8
   /** Reads of the current view after each rebuild or load. */
   val Readers = 3
-  val DailyNewDays = 20
 }
 
 object ScdCols {
@@ -29,10 +33,11 @@ final class ScdRebuild(val ctx: Ctx) extends Workload {
   import ScdSizes._
   val tracedUnits = 1
   override val MinUnits = 3
-  // passes keep getting faster for about eight passes of a fresh JVM
-  override val WarmUnits = 8
-  // a set-up takes a fraction of a second, and the first one runs cold
-  override val SetupRepeats = 7
+  override val WarmUnits = 5
+  // a set-up takes a tenth of a second, and set-ups get about 40% faster
+  // once the JIT compiles the generator, which on 4 cores happened
+  // between the 8th and the 12th; the median of 41 lies well past that
+  override val SetupRepeats = 41
   private val params = Gen.Params(RebuildEmployees, RebuildDays)
 
   private def spark = ctx.spark
@@ -113,28 +118,31 @@ final class ScdRebuild(val ctx: Ctx) extends Workload {
 }
 
 /** Daily incremental loads: a bootstrapped history, then one
-  * `ScdStreaming` run (partitioned storage, AvailableNow) per new file
-  * and a read of the current view. Some files are late (an older date
-  * held back from the bootstrap) or re-delivered copies.
+  * `ScdStreaming` run (partitioned storage, AvailableNow) per file,
+  * each followed by reads of the current view. The timed phase runs
+  * whole cycles of three loads — a new day, a re-delivered copy of it
+  * and a late file (an older date held back from the bootstrap) — so
+  * every run times the same mix whatever its speed.
   */
 final class ScdDaily(val ctx: Ctx) extends Workload {
   import ScdSizes._
-  val tracedUnits = 3
-  override val WarmUnits = 2
+  val CycleLoads = 3
+  val tracedUnits = CycleLoads
   private val params = Gen.Params(DailyEmployees, DailyBootstrapDays + DailyNewDays)
   private val cfg0 = EmployeeDimJob.Config("", "", legacyChangedStatusDate = false)
 
-  /** Delivery plan: bootstrap days, then load files (day index, copy). */
+  /** Delivery plan: bootstrap days, then load files (day index, copy):
+    * new days to warm up, one cycle per held-back day, then new days.
+    */
   private def plan(rnd: java.util.Random): (Seq[Int], Seq[(Int, Int)]) = {
-    val held = rnd.ints(1, DailyBootstrapDays).distinct().limit(2).toArray.toSeq.sorted
+    val held = rnd.ints(1, DailyBootstrapDays).distinct().limit(DailyHeldBack).toArray.toSeq.sorted
     val boot = (0 until DailyBootstrapDays).filterNot(held.contains)
     val fresh = (DailyBootstrapDays until DailyBootstrapDays + DailyNewDays).map(d => (d, 0))
-    // late files and one re-delivery early in the sequence, so every run sees them
-    val late = held.map(d => (d, 0))
-    val again = Seq((DailyBootstrapDays, 1))
-    val loads = fresh.take(1) ++ Seq(late(0)) ++ fresh.slice(1, 2) ++ again ++
-      fresh.slice(2, 3) ++ Seq(late(1)) ++ fresh.drop(3)
-    (boot, loads)
+    val cycles = held.zipWithIndex.flatMap { case (late, k) =>
+      val day = fresh(WarmUnits + k)
+      Seq(day, (day._1, 1), (late, 0))
+    }
+    (boot, fresh.take(WarmUnits) ++ cycles ++ fresh.drop(WarmUnits + held.length))
   }
 
   private def spark = ctx.spark
@@ -195,12 +203,11 @@ final class ScdDaily(val ctx: Ctx) extends Workload {
           }
         }._2
       }
-      val readS = reads.head
       delivered = delivered ++ days(d)
       if (timed) {
-        ctx.samples.loads += streamS + readS
+        ctx.samples.loads += streamS
         ctx.samples.reads ++= reads.map(_ * 1000)
-        ctx.samples.passes += streamS + readS
+        ctx.samples.passes += streamS + reads.sum
       }
       ctx.samples.check(s"scd_daily load $seq query failed", q.exception.isEmpty)
       if (tracer.enabled) {
@@ -209,7 +216,7 @@ final class ScdDaily(val ctx: Ctx) extends Workload {
         val entities = delivered.map(_.id).distinct.length
         Layers.add(ctx, "operators.ScdIncremental.touched_ratio", touched.size.toDouble / entities)
       }
-      streamS + readS
+      streamS + reads.sum
     }
 
     val off = new Tracer("untraced", false, spark.sparkContext)
@@ -217,11 +224,14 @@ final class ScdDaily(val ctx: Ctx) extends Workload {
     Stats.log("warm-up done")
     val end = ctx.deadline
     var stored = 0.0
-    while ((ctx.samples.loads.length < MinUnits || System.nanoTime() < end) && seq < loads.length - 6) {
-      load(off, timed = true)
-      // the table after a fixed number of loads, so the ratio does not depend on speed
-      if (ctx.samples.loads.length == MinUnits)
-        stored = Stats.dirBytes(Path.of(table)).toDouble / deliveredBytes
+    var cycles = 0
+    // a traced run keeps one held-back day for its traced cycle
+    val maxCycles = DailyHeldBack - (if (ctx.trace) 1 else 0)
+    while ((cycles < 1 || System.nanoTime() < end) && cycles < maxCycles) {
+      (1 to CycleLoads).foreach(_ => load(off, timed = true))
+      cycles += 1
+      // the table after one cycle, so the ratio does not depend on speed
+      if (cycles == 1) stored = Stats.dirBytes(Path.of(table)).toDouble / deliveredBytes
     }
 
     // checks, outside the timed spans: history and current view vs the model

@@ -14,6 +14,11 @@ object TableSizes {
   val Days = 32
   val CorrectionRows = 40
   val StatsCols = Seq("employee_number", "snapshot_date")
+  /** Registry queries each cycle runs over the sf0.01 tables: a stream
+    * gate whose store writes `batch_id=` paths by hand, and a graph
+    * query that anchors its iterations with `localCheckpoint`.
+    */
+  val Queries = Seq("q_stream_dedup_incr", "q_graph_walks")
 }
 
 /** One `VersionedTable` holding generated SCD history. A closed loop
@@ -21,12 +26,16 @@ object TableSizes {
   * late correction) and four reads (point `readWhere`, date-range
   * `readWhere`, a `read` pinned to a uniformly drawn old version, and the
   * current view via `ScdMerge.latestSnapshotAgg`). A model of every
-  * version's rows checks each read.
+  * version's rows checks each read. Each cycle then runs the
+  * [[TableSizes.Queries]] registry queries over the sf0.01 tables,
+  * checked against their recorded checksums, so that the state stores
+  * and anchors they use are under load in the same workload.
   */
 final class TableMixed(val ctx: Ctx) extends Workload {
   import TableSizes._
-  val tracedUnits = 2
-  override val MinUnits = 3
+  val tracedUnits = 1
+  // a cycle outlasts a run's seconds
+  override val MinUnits = 1
   private def spark = ctx.spark
   private val cols = ScdCols.all
   type Key = (Int, java.time.LocalDate)
@@ -77,6 +86,7 @@ final class TableMixed(val ctx: Ctx) extends Workload {
     }
     Stats.log("set-up done")
     ctx.inputRows = rowsNow.size.toLong
+    val registry = new RegistryRunner(ctx, ctx.tables, ctx.tables.getFileName.toString)
     var nextDay = BootstrapDays + DailyCommits
     val rnd = new java.util.Random(ctx.seed * 7919)
     val expectCache = scala.collection.mutable.HashMap.empty[(Long, String), (Long, Long)]
@@ -101,8 +111,9 @@ final class TableMixed(val ctx: Ctx) extends Workload {
     }
 
     /** One cycle; returns its operation time. A timed cycle records one
-      * load sample (its two writes) and one read sample (the mean of its
-      * four reads), so every sample mixes the same operations.
+      * load sample (its two writes), one read sample (the mean of its
+      * four reads), so every sample mixes the same operations, and one
+      * pass sample (the table operations and the registry queries).
       */
     def cycle(tracer: Tracer, timed: Boolean): Double = {
       writes.clear()
@@ -178,12 +189,13 @@ final class TableMixed(val ctx: Ctx) extends Workload {
       }
       checkSum("current view", cur, (latest, "current"),
         rowsNow.values.groupBy(_.e.id).values.map(_.maxBy(_.e.date.toEpochDay)))
+      val queriesS = Queries.map(registry.run(_, tracer)).sum
       if (timed) {
         ctx.samples.loads += writes.sum
         ctx.samples.reads += reads.sum / reads.length * 1000
-        ctx.samples.passes += writes.sum + reads.sum
+        ctx.samples.passes += writes.sum + reads.sum + queriesS
       }
-      writes.sum + reads.sum
+      writes.sum + reads.sum + queriesS
     }
 
     val off = new Tracer("untraced", false, spark.sparkContext)
