@@ -72,8 +72,13 @@ object Bench {
     s
   }
 
+  /** The core count every run is labelled and sized by, resolved once:
+    * `SPARK_GRAFT_CPUS` when set, else the cores the JVM sees.
+    */
+  private[graft] lazy val cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   private[graft] def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
@@ -174,34 +179,40 @@ object Bench {
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"calibration":${s.calibration},"sf":"${esc(sfDir)}"$extraJson}"""
   }
 
-  /** Persist the full run beside the floors file so BenchGuard, the
-    * driver, and round-over-round review all read the SAME numbers.
-    * Best-effort: silently skipped when bench/ is absent (e.g. running
-    * from outside the repo root).
+  /** Persist the full run beside the floors file so BenchGuard and
+    * round-over-round review all read the SAME numbers:
+    * always as `last_run_c<cpus>.json` (one record per core count, so
+    * a run at a second count never destroys the first), and as
+    * `last_run.json` only when the run's core count is the one
+    * `floors.json` was measured at — the two must agree for the guard
+    * to grade against them. Returns the `last_run.json` path when that
+    * was written, else the per-count copy. Best-effort: silently
+    * skipped when bench/ is absent (e.g. running from outside the repo
+    * root).
     */
   private[graft] def writeLastRun(s: Sweep, sfDir: String): Option[String] = {
     val dir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "bench"))
     if (!java.nio.file.Files.isDirectory(dir)) return None
-    val path = dir.resolve("last_run.json")
     val body = renderJson(s, sfDir, Seq(
-      "cpus" -> ("\"" + esc(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")) + "\""),
+      "cpus" -> ("\"" + esc(cpus) + "\""),
       // parsed, not raw: a malformed env value spliced verbatim would
       // produce invalid JSON and break every last_run consumer
       "runs" -> runsFromEnv.toString,
       "written_at" -> ("\"" + java.time.Instant.now().toString + "\"")))
-    java.nio.file.Files.write(path,
-      (body + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // ALSO write a per-core-count copy (additions-only provenance, r19):
-    // the driver benches at two core counts and the second run used to
-    // overwrite last_run.json, destroying the first run's per-query
-    // record — last_run_c<cpus>.json preserves both so round-over-round
-    // per-query comparison never depends on a mutable side file.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      .filter(c => c.isLetterOrDigit || c == '_' || c == '-')
-    java.nio.file.Files.write(dir.resolve(s"last_run_c$cpus.json"),
-      (body + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Some(path.toString)
+    def put(name: String): String = {
+      val path = dir.resolve(name)
+      java.nio.file.Files.write(path,
+        (body + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      path.toString
+    }
+    val perCount = put(
+      s"last_run_c${cpus.filter(c => c.isLetterOrDigit || c == '_' || c == '-')}.json")
+    val floors = dir.resolve("floors.json")
+    val floorCpus =
+      if (java.nio.file.Files.exists(floors)) BenchGuard.readFloors(floors.toString).cpus
+      else ""
+    Some(if (floorCpus.isEmpty || floorCpus == cpus) put("last_run.json") else perCount)
   }
 
   /** The driver captures only the LAST ~2000 chars of stdout and

@@ -72,8 +72,7 @@ object BenchFamilies {
       s""""$fam":{$rows}"""
     }.mkString("{", ",", "}")
     val json =
-      s"""{"factor":$factor,"runs":$runs,"cpus":"${sys.env.getOrElse(
-        "SPARK_GRAFT_CPUS", "4")}","calibration_sf01":${small.calibration},""" +
+      s"""{"factor":$factor,"runs":$runs,"cpus":"${Bench.cpus}","calibration_sf01":${small.calibration},""" +
         s""""calibration_sfx":${big.calibration},"families":$body,""" +
         s""""written_at":"${java.time.Instant.now()}"}\n"""
     val path = java.nio.file.Paths.get(

@@ -315,8 +315,7 @@ object BenchGuard {
         // provenance follows the RUN being rebaselined from, not the
         // current shell: rebaselining a 32-cpu run from an env-less
         // shell must not stamp cpus="4" next to 32-cpu times
-        cpus = if (run.cpus.nonEmpty) run.cpus
-               else sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
+        cpus = if (run.cpus.nonEmpty) run.cpus else Bench.cpus))
       System.err.println(
         s"[guard] floors rebaselined from last_run (${ok.size} queries)")
       return
@@ -336,7 +335,7 @@ object BenchGuard {
         // the only provenance available (best effort)
         mapper.readTree(new java.io.File(s"$benchDir/last_run.json"))
           .path("cpus").asText("")).getOrElse("")
-    val cpusNow = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpusNow = Bench.cpus
     // in --from-last-run mode the numbers being graded were measured at
     // the cpu count RECORDED IN last_run.json, not in the current env
     val lastRun: Option[LastRun] =

@@ -142,7 +142,7 @@ object Soak {
       f""""$q":{"sf01_sec":$s%.3f,"sfx_sec":$b%.3f,"ratio":$r%.3f}"""
     }.mkString("{", ",", "}")
     val json =
-      s"""{"factor":$factor,"cpus":"${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}","queries":$body,"written_at":"${java.time.Instant.now()}"}\n"""
+      s"""{"factor":$factor,"cpus":"${Bench.cpus}","queries":$body,"written_at":"${java.time.Instant.now()}"}\n"""
     val path = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "bench"), "soak_sf1.json")
     java.nio.file.Files.write(path,
@@ -182,7 +182,7 @@ object Soak {
       f""""$q":{"sf01_sec":$s%.3f,"sfx_sec":$b%.3f,"ratio":$r%.3f}"""
     }.mkString("{", ",", "}")
     val json2 =
-      s"""{"factor":$factor2,"cpus":"${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}","queries":$body2,"written_at":"${java.time.Instant.now()}"}\n"""
+      s"""{"factor":$factor2,"cpus":"${Bench.cpus}","queries":$body2,"written_at":"${java.time.Instant.now()}"}\n"""
     val path2 = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR", "bench"), "soak_sf2.json")
     java.nio.file.Files.write(path2,

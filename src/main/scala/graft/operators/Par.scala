@@ -25,11 +25,22 @@ private[graft] object Par {
   def actions(bodies: (() => Unit)*): Unit = {
     val real = bodies.filter(_ != null)
     if (real.sizeIs <= 1) { real.foreach(_.apply()); return }
+    // every body's jobs carry one per-call tag, so an interrupted call
+    // can cancel exactly the jobs it started. A tag, not a job group:
+    // the pool threads inherit the caller's local properties (its job
+    // group included) and a group would overwrite them.
+    val sc = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val tag = s"graft-par-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(real.size)
     try {
       val futs = real.map(b =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = b()
+          def call(): Unit = {
+            sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
+            try b() finally sc.foreach(_.removeJobTag(tag))
+          }
         }))
       var firstFailure: Throwable = null
       futs.foreach { f =>
@@ -42,10 +53,13 @@ private[graft] object Par {
             // an interrupt (e.g. a streaming-query stop) must not leave
             // bodies running detached — a prompt replay of the same
             // batch could then overwrite the same directories
-            // concurrently with the orphaned jobs. Cancel everything,
-            // drain the pool, THEN rethrow, so no body outlives the
-            // call ("commit point only after all bodies finished").
+            // concurrently with the orphaned jobs. Cancel everything
+            // (the bodies' Spark jobs too: an interrupted driver thread
+            // stops waiting, but its job runs on), drain the pool, THEN
+            // rethrow, so no body outlives the call ("commit point only
+            // after all bodies finished").
             futs.foreach(_.cancel(true))
+            sc.foreach(_.cancelJobsWithTag(tag))
             pool.shutdownNow()
             try pool.awaitTermination(60,
               java.util.concurrent.TimeUnit.SECONDS)

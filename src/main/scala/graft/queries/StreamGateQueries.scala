@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Queries.t
 import graft.functions.TextFunctions
-import graft.streaming.{CdcStream, ClusterStream, DecontaminationStream, DomainStream, DriftStream, IvfStream, KmvStream, LexiconStream, NoveltyStream, ReservoirStream, ScorecardStream, SkewStream, StreamingSketch, TransitionStream}
+import graft.streaming.{CdcStream, ClusterStream, DecontaminationStream, DomainStream, DriftStream, IvfStream, KmvStream, LexiconStream, MergeStore, NoveltyStream, ReservoirStream, ScorecardStream, SkewStream, StreamingSketch, TransitionStream}
 
 /** DRIVER-ORACLED streaming gates: each query folds a streaming
   * monitor's `foreachBatch` body over three deterministic id-ordered
@@ -246,7 +246,7 @@ object StreamGateQueries {
     val write = CdcStream.snapshotDiffBatch(state, changes, Seq("o_custkey")) _
     write(old, 0L)
     write(cur, 1L)
-    s.read.parquet(s"$changes/batch_id=1")
+    MergeStore(changes, MergeStore.OutputLog).batch(s, 1L)
       .select("o_custkey", "change_type", "changed_cols")
   }
 
@@ -414,8 +414,7 @@ object StreamGateQueries {
       DriftStream.driftBatch(store, drift)(
         graft.operators.Drift.lengthBuckets(b, "source", "n_chars"), i.toLong)
     }
-    DriftStream.driftLog(s, drift)
-      .filter(col("batch_id") === 2L)
+    MergeStore(drift, MergeStore.OutputLog).batch(s, 2L)
       .select("source", "n_docs", "chi2")
   }
 
@@ -444,7 +443,7 @@ object StreamGateQueries {
         shingleSize = DedupQueries.MinHashShingle,
         bands = DedupQueries.MinHashBands)(b, i.toLong)
     }
-    s.read.parquet(slices.indices.map(i => s"$pairsDir/batch_id=$i"): _*)
+    MergeStore(pairsDir, MergeStore.OutputLog).read(s).get
       .select("id_a", "id_b")
   }
 
@@ -543,13 +542,11 @@ object StreamGateQueries {
       .select(col("c_custkey").as("user_id"),
         col("c_nationkey"), col("c_mktsegment"))
       .write.mode("overwrite").parquet(dimDir)
-    val slices = tsSlices(events, "ts")
-    slices.zipWithIndex.foreach { case (b, i) =>
-      StreamingEnrich.enrichBatch(dimDir, Seq("user_id"),
-        (df, id) => df.write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$id"))(b, i.toLong)
+    val out = MergeStore(outDir, MergeStore.OutputLog)
+    tsSlices(events, "ts").zipWithIndex.foreach { case (b, i) =>
+      StreamingEnrich.enrichBatch(dimDir, Seq("user_id"), out.write)(b, i.toLong)
     }
-    s.read.parquet(slices.indices.map(i => s"$outDir/batch_id=$i"): _*)
+    out.read(s).get
       .select("event_id", "user_id", "event_type",
         "c_nationkey", "c_mktsegment")
   }
@@ -718,7 +715,7 @@ object StreamGateQueries {
           upper = 6.0, lower = 0.0, pairsDir = root, batchId = i.toLong)
     }
     graft.streaming.LinkageStream.verdicts(s, root)
-      .map(_.drop("batch_id")) // partition column, not part of the verdict
+      .map(_.drop(MergeStore.BatchCol)) // not part of the verdict
       .getOrElse(s.emptyDataFrame)
   }
 

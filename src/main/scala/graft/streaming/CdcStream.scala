@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.SnapshotDiff
@@ -43,36 +43,26 @@ object CdcStream {
       compareCols: Option[Seq[String]] = None)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val statePath = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val priorIds =
-      if (!fs.exists(statePath)) Seq.empty
-      else fs.listStatus(statePath).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith("batch_id="))
-        .map(_.stripPrefix("batch_id=").toLong)
-        .filter(_ < batchId)
+    // each batch directory is a whole snapshot; the prior one is the
+    // newest below this batch
+    val state = MergeStore(stateDir, MergeStore.OutputLog)
     // persist the snapshot FIRST and diff from the just-written
     // parquet: the incoming batch plan (a 100 TB snapshot scan) is
     // evaluated exactly once, and the emitted changes provably come
     // from the same bytes the state now holds. Replay stays
     // idempotent — a re-run overwrites the same partition and diffs
     // against the same pre-batch state.
-    batch.write.mode(SaveMode.Overwrite)
-      .parquet(s"$stateDir/batch_id=$batchId")
-    val stored = spark.read.parquet(s"$stateDir/batch_id=$batchId")
-    val changes = priorIds match {
-      case ids if ids.nonEmpty =>
-        val prior = spark.read.parquet(s"$stateDir/batch_id=${ids.max}")
-        SnapshotDiff.diff(prior, stored, keyCols, compareCols)
-      case _ =>
+    state.write(batch, batchId)
+    val stored = state.batch(spark, batchId)
+    val changes = state.latest(spark, before = batchId) match {
+      case Some(prior) => SnapshotDiff.diff(prior, stored, keyCols, compareCols)
+      case None =>
         // bootstrap: everything is new
         stored.select(keyCols.map(col): _*)
           .withColumn("change_type", lit("added"))
           .withColumn("changed_cols", lit(""))
     }
-    changes.write.mode(SaveMode.Overwrite)
-      .parquet(s"$changesDir/batch_id=$batchId")
+    MergeStore(changesDir, MergeStore.OutputLog).write(changes, batchId)
   }
 
   /** Wire the writer onto a streaming snapshot source. One snapshot
@@ -86,19 +76,13 @@ object CdcStream {
       checkpointDir: String,
       keyCols: Seq[String],
       compareCols: Option[Seq[String]] = None) =
-    snapshots.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(snapshotDiffBatch(stateDir, changesDir, keyCols, compareCols) _)
+    MergeStore.foreachBatch(snapshots, checkpointDir)(
+      snapshotDiffBatch(stateDir, changesDir, keyCols, compareCols))
 
   /** All captured changes, change-log ordered: (batch_id, keys…,
     * change_type, changed_cols). Partition-pruned reads by batch_id
     * range are free (directory layout IS the index).
     */
   def changeLog(spark: org.apache.spark.sql.SparkSession, changesDir: String): DataFrame =
-    spark.read
-      .option("basePath", changesDir)
-      .parquet(changesDir)
-      // partition-value inference narrows small ids to int; the
-      // contract is long (foreachBatch batch ids are longs)
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    MergeStore(changesDir, MergeStore.OutputLog).read(spark).get
 }

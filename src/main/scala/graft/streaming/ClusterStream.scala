@@ -31,6 +31,9 @@ import graft.operators.ConnectedComponents
   */
 object ClusterStream {
 
+  /** One full label table per batch; readers take the newest. */
+  private def store(stateDir: String) = MergeStore(stateDir, MergeStore.OutputLog)
+
   /** Fold one batch of candidate pairs (id_a, id_b) into the label
     * store. Batches with no pairs still commit a batch directory (the
     * labels carry forward), so the reader's latest-batch rule stays
@@ -46,10 +49,8 @@ object ClusterStream {
     // directory's footers per micro-batch (and was a measurable slice
     // of the r15 q_stream_cluster floor breach); reading the single
     // chosen directory also skips partition discovery over the store
-    val prior = BatchState.committedBatchIds(spark, stateDir)
-      .filter(_ < batchId).lastOption
-      .map(latest => spark.read.parquet(s"$stateDir/batch_id=$latest")
-        .select("node", "component"))
+    val prior = store(stateDir).latest(spark, before = batchId)
+      .map(_.select("node", "component"))
     val starEdges = prior.map(_.select(
       col("node").as("id_a"), col("component").as("id_b")))
     val edges = starEdges match {
@@ -63,8 +64,7 @@ object ClusterStream {
             .withColumn("node", lit(0L)).withColumn("component", lit(0L))
             .limit(0))
       else ConnectedComponents.resolve(edges, "id_a", "id_b")
-    labels.select(col("node"), col("component"))
-      .write.mode("overwrite").parquet(s"$stateDir/batch_id=$batchId")
+    store(stateDir).write(labels.select(col("node"), col("component")), batchId)
   }
 
   /** The current labels: (node, component) as of the latest completed
@@ -72,11 +72,7 @@ object ClusterStream {
     */
   def labels(spark: SparkSession, stateDir: String): DataFrame = {
     import spark.implicits._
-    BatchState.maxBatchId(spark, stateDir) match {
-      case None => Seq.empty[(Long, Long)].toDF("node", "component")
-      case Some(latest) =>
-        spark.read.parquet(s"$stateDir/batch_id=$latest")
-          .select("node", "component")
-    }
+    store(stateDir).latest(spark).map(_.select("node", "component"))
+      .getOrElse(Seq.empty[(Long, Long)].toDF("node", "component"))
   }
 }

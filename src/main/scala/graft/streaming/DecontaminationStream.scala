@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Decontaminate
@@ -29,6 +28,9 @@ object DecontaminationStream {
 
   final case class Config(shingleSize: Int = 3, threshold: Double = 0.8)
 
+  private def store(stateDir: String) =
+    MergeStore(stateDir, MergeStore.Semilattice(_.select("h").distinct()))
+
   /** Reduce one micro-batch of benchmark documents to its distinct
     * shingle hashes under `stateDir/batch_id=N`. Empty batches write
     * nothing.
@@ -41,9 +43,8 @@ object DecontaminationStream {
       cfg: Config,
       batchId: Long): Unit = {
     if (batch.isEmpty) return
-    Decontaminate.benchmarkHashes(batch, idCol, textCol, cfg.shingleSize)
-      .write.mode("overwrite")
-      .parquet(BatchState.batchDir(batch.sparkSession, stateDir, batchId))
+    store(stateDir).write(
+      Decontaminate.benchmarkHashes(batch, idCol, textCol, cfg.shingleSize), batchId)
   }
 
   /** Attach the per-batch reducer to a streaming benchmark feed. */
@@ -54,37 +55,24 @@ object DecontaminationStream {
       stateDir: String,
       checkpointDir: String,
       cfg: Config = Config()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[_], batchId: Long) =>
-        mergeBatch(batch.toDF(), idCol, textCol, stateDir, cfg, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      mergeBatch(_, idCol, textCol, stateDir, cfg, _)).start()
 
   /** The live benchmark shingle store: distinct union across all
     * completed batches. Empty (batchless) state yields an empty frame.
     */
   def hashes(spark: SparkSession, stateDir: String): DataFrame = {
     import spark.implicits._
-    BatchState.read(spark, stateDir) match {
-      case None => Seq.empty[Long].toDF("h")
-      case Some(state) => state.select("h").distinct()
-    }
+    store(stateDir).merged(spark).getOrElse(Seq.empty[Long].toDF("h"))
   }
 
   /** Collapse the accumulated batch directories into one resolved
     * batch holding the distinct shingle-hash union — lossless (the
     * store is a set; distinct-union with future batches is unchanged).
-    * Atomic swap via [[BatchState.swap]].
-    * Single-writer: run at most ONE compaction against a store at a
-    * time — the swap protocol tolerates a live stream writer and
-    * crash/recovery, but two concurrent compactors race on the same
-    * rename sequence ([[BatchState.swap]]).
+    * Atomic swap; single-writer ([[MergeStore.compact]]).
     */
   def compact(spark: SparkSession, stateDir: String): Unit =
-    BatchState.maxBatchId(spark, stateDir).foreach { maxBatch =>
-      BatchState.swap(spark, stateDir, hashes(spark, stateDir), maxBatch)
-    }
+    store(stateDir).compact(spark)
 
   /** Gate a corpus against the CURRENT store — identical output to
     * [[Decontaminate.overlapReport]] run against the union of every
@@ -101,7 +89,7 @@ object DecontaminationStream {
       textCol: String,
       cfg: Config = Config()): DataFrame = {
     import spark.implicits._
-    val raw = BatchState.read(spark, stateDir)
+    val raw = store(stateDir).read(spark)
       .map(_.select("h")).getOrElse(Seq.empty[Long].toDF("h"))
     Decontaminate.overlapReportHashes(
       corpus, raw, idCol, textCol, cfg.shingleSize, cfg.threshold)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -24,6 +24,8 @@ import graft.functions.UrlFunctions
   */
 object DomainStream {
 
+  private def store(stateDir: String) = MergeStore(stateDir, MergeStore.Sum("__n", "__mass"))
+
   /** Fold one micro-batch of (url, mass) rows into the store. The
     * canonicalization chain runs HERE, map-only, inside the batch's
     * own aggregate — the store never holds a raw URL.
@@ -36,14 +38,12 @@ object DomainStream {
       batchId: Long): Unit = {
     if (batch.isEmpty) return
     val host = UrlFunctions.hostOf(col(urlCol))
-    batch
+    store(stateDir).write(batch
       .select(UrlFunctions.registrableDomain(host).as("domain"),
         host.as("host"),
         col(massCol).cast("decimal(18,2)").as("__mass"))
       .groupBy("domain", "host")
-      .agg(count(lit(1)).as("__n"), sum("__mass").as("__mass"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(BatchState.batchDir(batch.sparkSession, stateDir, batchId))
+      .agg(count(lit(1)).as("__n"), sum("__mass").as("__mass")), batchId)
   }
 
   /** Attach the monitor to a streaming source. */
@@ -53,23 +53,16 @@ object DomainStream {
       massCol: String,
       stateDir: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[_], batchId: Long) =>
-        countBatch(batch.toDF(), urlCol, massCol, stateDir, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      countBatch(_, urlCol, massCol, stateDir, _)).start()
 
   /** The cumulative per-domain report (None before the first batch):
     * (domain, n_urls, n_hosts, mass) — column-identical to the batch
     * q_domain_stats shape.
     */
   def report(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    BatchState.read(spark, stateDir).map { state =>
-      state
-        .groupBy("domain", "host")
-        .agg(sum("__n").as("__n"), sum("__mass").as("__mass"))
-        .groupBy("domain")
+    store(stateDir).merged(spark).map {
+      _.groupBy("domain")
         .agg(
           sum("__n").as("n_urls"),
           count(lit(1)).as("n_hosts"),
@@ -78,7 +71,5 @@ object DomainStream {
 
   /** Collapse all but the newest batch partition (additive merge). */
   def compact(spark: SparkSession, stateDir: String): Unit =
-    BatchState.compactExceptNewest(spark, stateDir)(
-      _.groupBy("domain", "host")
-        .agg(sum("__n").as("__n"), sum("__mass").as("__mass")))
+    store(stateDir).compact(spark)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Drift
@@ -25,6 +25,9 @@ import graft.operators.Drift
   */
 object DriftStream {
 
+  private def counts(storeDir: String) = MergeStore(storeDir, MergeStore.Sum("o"))
+  private def log(driftDir: String) = MergeStore(driftDir, MergeStore.OutputLog)
+
   /** The foreachBatch body (directly callable for tests/backfill):
     * `batch` must carry (source, bucket) rows (e.g. via
     * [[Drift.lengthBuckets]]).
@@ -33,21 +36,10 @@ object DriftStream {
       storeDir: String,
       driftDir: String,
       maxBucket: Long = 11L)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    batch
-      .groupBy("source", "bucket")
-      .agg(count(lit(1)).as("o"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$storeDir/batch_id=$batchId")
-    val cumulative = spark.read
-      .option("basePath", storeDir)
-      .parquet(storeDir)
-      .filter(col("batch_id") <= batchId)
-      .groupBy("source", "bucket")
-      .agg(sum("o").as("o"))
-    Drift.chi2FromCounts(cumulative, maxBucket)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$driftDir/batch_id=$batchId")
+    val store = counts(storeDir)
+    store.write(batch.groupBy("source", "bucket").agg(count(lit(1)).as("o")), batchId)
+    val cumulative = store.merged(batch.sparkSession, _ <= batchId).get
+    log(driftDir).write(Drift.chi2FromCounts(cumulative, maxBucket), batchId)
   }
 
   /** Wire the monitor onto a streaming document source (any schema
@@ -60,16 +52,12 @@ object DriftStream {
       storeDir: String,
       driftDir: String,
       checkpointDir: String) =
-    Drift.lengthBuckets(docs, sourceCol, nCharsCol).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(driftBatch(storeDir, driftDir) _)
+    MergeStore.foreachBatch(Drift.lengthBuckets(docs, sourceCol, nCharsCol),
+      checkpointDir)(driftBatch(storeDir, driftDir))
 
   /** The drift history: (batch_id, source, n_docs, chi2). */
   def driftLog(spark: org.apache.spark.sql.SparkSession, driftDir: String): DataFrame =
-    spark.read
-      .option("basePath", driftDir)
-      .parquet(driftDir)
-      .withColumn("batch_id", col("batch_id").cast("long"))
+    log(driftDir).read(spark).get
 
   /** Live PSI over the SAME cumulative count store the chi-square
     * monitor writes — counts are the mergeable representation, so any
@@ -80,12 +68,10 @@ object DriftStream {
       spark: org.apache.spark.sql.SparkSession,
       storeDir: String,
       maxBucket: Long = 11L): DataFrame =
-    BatchState.read(spark, storeDir) match {
+    counts(storeDir).merged(spark) match {
       case None =>
         import spark.implicits._
         Seq.empty[(String, Long, Double)].toDF("source", "n_docs", "psi")
-      case Some(state) =>
-        Drift.psiFromCounts(
-          state.groupBy("source", "bucket").agg(sum("o").as("o")), maxBucket)
+      case Some(c) => Drift.psiFromCounts(c, maxBucket)
     }
 }

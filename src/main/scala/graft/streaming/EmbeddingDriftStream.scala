@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.VectorStats
 
@@ -25,21 +24,20 @@ import graft.operators.VectorStats
   */
 object EmbeddingDriftStream {
 
+  private def store(storeDir: String) = MergeStore(storeDir, MergeStore.Sum("s", "n"))
+
   /** The foreachBatch body (directly callable for tests/backfill). */
   def driftBatch(
       labelCol: String, vecCol: String, storeDir: String)(
       batch: DataFrame, batchId: Long): Unit =
-    VectorStats.centroidSums(batch, labelCol, vecCol)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(BatchState.batchDir(batch.sparkSession, storeDir, batchId))
+    store(storeDir).write(VectorStats.centroidSums(batch, labelCol, vecCol), batchId)
 
   /** Wire the monitor onto a streaming embedding source. */
   def driftStream(
       embeddings: DataFrame, labelCol: String, vecCol: String,
       storeDir: String, checkpointDir: String) =
-    embeddings.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(driftBatch(labelCol, vecCol, storeDir) _)
+    MergeStore.foreachBatch(embeddings, checkpointDir)(
+      driftBatch(labelCol, vecCol, storeDir))
 
   /** The reference side as a persistable sum table (compute once,
     * write beside the store; any engine re-derives identical
@@ -53,8 +51,7 @@ object EmbeddingDriftStream {
     * committed batch.
     */
   def sums(spark: SparkSession, storeDir: String): Option[DataFrame] =
-    BatchState.read(spark, storeDir).map(
-      _.groupBy("label", "dim").agg(sum("s").as("s"), sum("n").as("n")))
+    store(storeDir).merged(spark)
 
   /** Live shift of the streamed corpus against `refSums` (a
     * [[referenceSums]] table) — equals the batch operator on the
@@ -76,13 +73,8 @@ object EmbeddingDriftStream {
   /** Compact the store (atomic swap; lossless — sums and counts merge
     * by addition). Additive state: every batch except the newest
     * folds, so a post-crash replay of the newest overwrites only its
-    * own partition ([[BatchState.compactExceptNewest]]).
-    * Single-writer: run at most ONE compaction against a store at a
-    * time — the swap protocol tolerates a live stream writer and
-    * crash/recovery, but two concurrent compactors race on the same
-    * rename sequence ([[BatchState.swap]]).
+    * own partition. Single-writer ([[MergeStore.compact]]).
     */
   def compact(spark: SparkSession, storeDir: String): Unit =
-    BatchState.compactExceptNewest(spark, storeDir)(
-      _.groupBy("label", "dim").agg(sum("s").as("s"), sum("n").as("n")))
+    store(storeDir).compact(spark)
 }

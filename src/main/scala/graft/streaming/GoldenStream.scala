@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Survivorship
@@ -29,6 +28,10 @@ import graft.operators.Survivorship
   */
 object GoldenStream {
 
+  private def counts(stateDir: String) = MergeStore(stateDir, MergeStore.Sum("n"))
+  private def latestStore(stateDir: String) =
+    MergeStore(stateDir, MergeStore.LatestWins(Seq("entity_id", "attr"), Seq("ord", "tie_id")))
+
   /** Fold one micro-batch of entity-labelled records into the store. */
   def countBatch(
       batch: DataFrame,
@@ -37,9 +40,7 @@ object GoldenStream {
       stateDir: String,
       batchId: Long): Unit = {
     if (batch.isEmpty) return
-    Survivorship.countRecords(batch, entityCol, attrCols)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(BatchState.batchDir(batch.sparkSession, stateDir, batchId))
+    counts(stateDir).write(Survivorship.countRecords(batch, entityCol, attrCols), batchId)
   }
 
   /** Attach the fold to a streaming source of entity-labelled records. */
@@ -49,12 +50,8 @@ object GoldenStream {
       attrCols: Seq[String],
       stateDir: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[_], batchId: Long) =>
-        countBatch(batch.toDF(), entityCol, attrCols, stateDir, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      countBatch(_, entityCol, attrCols, stateDir, _)).start()
 
   /** The live golden record off the cumulative store (None before the
     * first batch). Values come back as strings (the store is
@@ -65,14 +62,12 @@ object GoldenStream {
       spark: SparkSession,
       stateDir: String,
       rules: Seq[Survivorship.Rule]): Option[DataFrame] =
-    BatchState.read(spark, stateDir)
+    counts(stateDir).read(spark)
       .map(Survivorship.goldenRecordFromCounts(_, rules))
 
   /** Collapse all but the newest batch partition (counts merge by sum). */
   def compact(spark: SparkSession, stateDir: String): Unit =
-    BatchState.compactExceptNewest(spark, stateDir)(
-      _.groupBy(col("entity_id"), col("attr"), col("value"))
-        .agg(sum("n").as("n")))
+    counts(stateDir).compact(spark)
 
   // ---- the latest-wins companion store: LatestBy rules live here
   // (argmax by (ord, tie_id) is a semilattice — each batch keeps its
@@ -88,9 +83,7 @@ object GoldenStream {
       stateDir: String,
       batchId: Long): Unit = {
     if (batch.isEmpty) return
-    Survivorship.latestRecords(batch, entityCol, rules)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(BatchState.batchDir(batch.sparkSession, stateDir, batchId))
+    latestStore(stateDir).write(Survivorship.latestRecords(batch, entityCol, rules), batchId)
   }
 
   /** The live LatestBy values off the merged latest-wins store (one
@@ -102,15 +95,10 @@ object GoldenStream {
       spark: SparkSession,
       stateDir: String,
       rules: Seq[Survivorship.LatestBy]): Option[DataFrame] =
-    BatchState.read(spark, stateDir)
+    latestStore(stateDir).read(spark)
       .map(Survivorship.latestFromState(_, rules))
 
   /** Compact the latest-wins store (argmax merge — lossless). */
   def compactLatest(spark: SparkSession, stateDir: String): Unit =
-    BatchState.compactExceptNewest(spark, stateDir)(
-      _.groupBy(col("entity_id"), col("attr"))
-        .agg(max(struct(col("ord"), col("tie_id"), col("value"))).as("w"))
-        .select(col("entity_id"), col("attr"),
-          col("w.ord").as("ord"), col("w.tie_id").as("tie_id"),
-          col("w.value").as("value")))
+    latestStore(stateDir).compact(spark)
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -32,6 +33,27 @@ import graft.operators.IvfIndex
   */
 object IvfStream {
 
+  /** Latest batch per id wins — deterministic under replay
+    * (byte-identical rows) AND under re-embedding (a corrected vector
+    * in a later batch wins; `dropDuplicates` would keep a
+    * partition-order-dependent survivor).
+    */
+  private def store(stateDir: String) =
+    MergeStore(stateDir, MergeStore.Semilattice { state =>
+      val base = state.select(col("id"), col("nv"),
+        col("cell").cast("int").as("cell"), col(MergeStore.BatchCol))
+      // fast-path decision from the frame's OWN file-index snapshot
+      // (not a second filesystem listing, which could disagree with
+      // the scanned files if a compaction or batch write lands
+      // between the two listings)
+      if (MergeStore.batchCount(state) <= 1) base // already unique per id
+      else base
+        .withColumn("__rn", row_number().over(
+          Window.partitionBy("id").orderBy(col(MergeStore.BatchCol).desc)))
+        .filter(col("__rn") === 1)
+        .drop("__rn")
+    }, partitionBy = Seq("cell"))
+
   /** Assign one micro-batch under `stateDir/batch_id=N`, partitioned
     * by cell for probe-side pruning. Empty batches write nothing.
     */
@@ -43,10 +65,9 @@ object IvfStream {
       stateDir: String,
       batchId: Long): Unit = {
     if (batch.isEmpty) return
-    IvfIndex.assign(batch, idCol, vecCol, model)
-      .select(col("id"), col("nv"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(BatchState.batchDir(batch.sparkSession, stateDir, batchId))
+    store(stateDir).write(
+      IvfIndex.assign(batch, idCol, vecCol, model)
+        .select(col("id"), col("nv"), col("cell")), batchId)
   }
 
   /** Attach the per-batch assigner to a streaming embedding feed. */
@@ -57,18 +78,11 @@ object IvfStream {
       model: IvfIndex.Model,
       stateDir: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[_], batchId: Long) =>
-        mergeBatch(batch.toDF(), idCol, vecCol, model, stateDir, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      mergeBatch(_, idCol, vecCol, model, stateDir, _)).start()
 
   /** The live index: every streamed assignment, resolved to the
-    * LATEST batch per id — deterministic under replay (byte-identical
-    * rows) AND under re-embedding (a corrected vector in a later batch
-    * wins; `dropDuplicates` would keep a partition-order-dependent
-    * survivor). Shaped like [[IvfIndex.index]] for
+    * LATEST batch per id. Shaped like [[IvfIndex.index]] for
     * [[IvfIndex.searchIndex]]. Empty state yields an empty frame.
     *
     * Cost note: the latest-wins resolution aggregates the whole
@@ -79,29 +93,8 @@ object IvfStream {
     */
   def index(spark: SparkSession, stateDir: String): DataFrame = {
     import spark.implicits._
-    BatchState.read(spark, stateDir) match {
-      case None =>
-        Seq.empty[(Long, Seq[Double], Int)].toDF("id", "nv", "cell")
-      case Some(state) =>
-        val base = state
-          .select(col("id"), col("nv"), col("cell").cast("int").as("cell"),
-            col("batch_id"))
-        // fast-path decision from the frame's OWN file-index snapshot
-        // (not a second filesystem listing, which could disagree with
-        // the scanned files if a compaction or batch write lands
-        // between the two listings)
-        val nBatches = state.inputFiles
-          .flatMap(_.split('/').find(_.startsWith("batch_id=")))
-          .distinct.length
-        if (nBatches <= 1) base.drop("batch_id") // already unique per id
-        else base
-          .withColumn("__rn",
-            org.apache.spark.sql.functions.row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy("id").orderBy(col("batch_id").desc)))
-          .filter(col("__rn") === 1)
-          .drop("__rn", "batch_id")
-    }
+    store(stateDir).merged(spark)
+      .getOrElse(Seq.empty[(Long, Seq[Double], Int)].toDF("id", "nv", "cell"))
   }
 
   /** Collapse the accumulated batch directories into ONE resolved
@@ -110,17 +103,11 @@ object IvfStream {
     * a crash mid-compact or a concurrent reader never sees a
     * half-written store. After compaction, [[index]] takes its
     * single-batch fast path: no aggregation, and the probed cells
-    * prune at the directory level again.
-    * Single-writer: run at most ONE compaction against a store at a
-    * time — the swap protocol tolerates a live stream writer and
-    * crash/recovery, but two concurrent compactors race on the same
-    * rename sequence ([[BatchState.swap]]).
+    * prune at the directory level again. Single-writer
+    * ([[MergeStore.compact]]).
     */
   def compact(spark: SparkSession, stateDir: String): Unit =
-    BatchState.maxBatchId(spark, stateDir).foreach { maxBatch =>
-      BatchState.swap(spark, stateDir, index(spark, stateDir),
-        maxBatch, partitionBy = Seq("cell"))
-    }
+    store(stateDir).compact(spark)
 
   /** Search the live index — same contract as [[IvfIndex.search]] over
     * everything ever streamed.

@@ -30,6 +30,23 @@ object KmvStream {
 
   final case class Config(n: Int = 8, k: Int = ThetaSketch.DefaultK)
 
+  /** Per-source sketches merged across batches: explode the retained
+    * values and re-run the bounded aggregator — the merge IS the
+    * aggregation.
+    */
+  private def store(stateDir: String, cfg: Config) =
+    MergeStore(stateDir, MergeStore.Semilattice { state =>
+      val spark = state.sparkSession
+      import spark.implicits._
+      state
+        .select(col("source"), explode(col("sketch")).as("h"))
+        .as[(String, Long)]
+        .groupByKey(_._1)
+        .mapValues(_._2)
+        .agg(new ThetaSketch.KmvAggregator(cfg.k).toColumn.name("sketch"))
+        .toDF("source", "sketch")
+    })
+
   /** Reduce one micro-batch into (source, sketch) rows under
     * `stateDir/batch_id=N`. Empty batches write nothing.
     */
@@ -42,10 +59,7 @@ object KmvStream {
       batchId: Long): Unit = {
     val sketches = ThetaSketch.sourceSketches(
       batch, sourceCol, textCol, cfg.n, cfg.k)
-    if (!sketches.isEmpty) {
-      sketches.write.mode("overwrite")
-        .parquet(BatchState.batchDir(batch.sparkSession, stateDir, batchId))
-    }
+    if (!sketches.isEmpty) store(stateDir, cfg).write(sketches, batchId)
   }
 
   /** Attach the per-batch reducer to a streaming Dataset. */
@@ -56,48 +70,29 @@ object KmvStream {
       stateDir: String,
       checkpointDir: String,
       cfg: Config = Config()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[_], batchId: Long) =>
-        mergeBatch(batch.toDF(), sourceCol, textCol, stateDir, cfg, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      mergeBatch(_, sourceCol, textCol, stateDir, cfg, _)).start()
 
-  /** Per-source sketches merged across all completed batches: explode
-    * the retained values and re-run the bounded aggregator — the
-    * merge IS the aggregation, so streamed state converges exactly to
-    * [[ThetaSketch.sourceSketches]] over the union of the batches.
-    * Empty (batchless) state yields an empty frame.
+  /** Per-source sketches merged across all completed batches — the
+    * streamed state converges exactly to [[ThetaSketch.sourceSketches]]
+    * over the union of the batches. Empty (batchless) state yields an
+    * empty frame.
     */
   def merged(spark: SparkSession, stateDir: String, cfg: Config = Config()): DataFrame = {
     import spark.implicits._
-    BatchState.read(spark, stateDir) match {
-      case None => Seq.empty[(String, Seq[Long])].toDF("source", "sketch")
-      case Some(state) => state
-        .select(col("source"), explode(col("sketch")).as("h"))
-        .as[(String, Long)]
-        .groupByKey(_._1)
-        .mapValues(_._2)
-        .agg(new ThetaSketch.KmvAggregator(cfg.k).toColumn.name("sketch"))
-        .toDF("source", "sketch")
-    }
+    store(stateDir, cfg).merged(spark)
+      .getOrElse(Seq.empty[(String, Seq[Long])].toDF("source", "sketch"))
   }
 
   /** Collapse the accumulated batch directories into one resolved
     * batch holding the merged per-source sketches — lossless for every
     * future merge (a KMV sketch is a semilattice: merging with the
     * already-merged state equals merging with the original batches).
-    * Atomic swap via [[BatchState.swap]]; batches streamed afterwards
-    * keep merging on read as before.
-    * Single-writer: run at most ONE compaction against a store at a
-    * time — the swap protocol tolerates a live stream writer and
-    * crash/recovery, but two concurrent compactors race on the same
-    * rename sequence ([[BatchState.swap]]).
+    * Atomic swap; batches streamed afterwards keep merging on read as
+    * before. Single-writer ([[MergeStore.compact]]).
     */
   def compact(spark: SparkSession, stateDir: String, cfg: Config = Config()): Unit =
-    BatchState.maxBatchId(spark, stateDir).foreach { maxBatch =>
-      BatchState.swap(spark, stateDir, merged(spark, stateDir, cfg), maxBatch)
-    }
+    store(stateDir, cfg).compact(spark)
 
   /** Live overlap matrix from the streamed state (driver-side pair
     * loop over collected sketches, as in

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{Divergence, Lexicon}
 
@@ -24,28 +23,26 @@ import graft.operators.{Divergence, Lexicon}
   */
 object LexiconStream {
 
+  private def store(storeDir: String) = MergeStore(storeDir, MergeStore.Sum("c"))
+
   /** The foreachBatch body (directly callable for tests/backfill). */
   def lexiconBatch(
       sourceCol: String, textCol: String, storeDir: String)(
       batch: DataFrame, batchId: Long): Unit =
-    Divergence.unigrams(batch, sourceCol, textCol)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(BatchState.batchDir(batch.sparkSession, storeDir, batchId))
+    store(storeDir).write(Divergence.unigrams(batch, sourceCol, textCol), batchId)
 
   /** Wire the lexicon store onto a streaming document source. */
   def lexiconStream(
       docs: DataFrame, sourceCol: String, textCol: String,
       storeDir: String, checkpointDir: String) =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(lexiconBatch(sourceCol, textCol, storeDir) _)
+    MergeStore.foreachBatch(docs, checkpointDir)(
+      lexiconBatch(sourceCol, textCol, storeDir))
 
   /** Cumulative (source, w, c) counts, or None before the first
     * committed batch.
     */
   def counts(spark: SparkSession, storeDir: String): Option[DataFrame] =
-    BatchState.read(spark, storeDir).map(
-      _.groupBy("source", "w").agg(sum("c").as("c")))
+    store(storeDir).merged(spark)
 
   /** Live per-source Zipf slope — equals
     * [[Divergence.zipfSlope]] on the union of delivered batches.
@@ -86,15 +83,10 @@ object LexiconStream {
   /** Compact the store (atomic swap; lossless — counts merge by sum).
     * Additive state: every batch except the newest folds, so a
     * post-crash replay of the newest overwrites only its own
-    * partition ([[BatchState.compactExceptNewest]]).
-    * Single-writer: run at most ONE compaction against a store at a
-    * time — the swap protocol tolerates a live stream writer and
-    * crash/recovery, but two concurrent compactors race on the same
-    * rename sequence ([[BatchState.swap]]).
+    * partition. Single-writer ([[MergeStore.compact]]).
     */
   def compact(spark: SparkSession, storeDir: String): Unit =
-    BatchState.compactExceptNewest(spark, storeDir)(
-      _.groupBy("source", "w").agg(sum("c").as("c")))
+    store(storeDir).compact(spark)
 
   private def emptySlope(spark: SparkSession): DataFrame = {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.RecordLinkage
 import graft.operators.RecordLinkage.LinkField
@@ -32,6 +32,8 @@ import graft.operators.RecordLinkage.LinkField
   */
 object LinkageStream {
 
+  private def verdictLog(pairsDir: String) = MergeStore(pairsDir, MergeStore.OutputLog)
+
   /** Score one arriving batch of right-side rows against the static
     * reference and append the verdicts as this batch's partition.
     */
@@ -52,15 +54,13 @@ object LinkageStream {
     // two independent partition dirs off the same batch: land them
     // concurrently (guide §2.6); replay overwrites both byte-identical
     graft.operators.Par.actions(
-      () => scored.write.mode(SaveMode.Overwrite)
-        .parquet(s"$pairsDir/batch_id=$batchId"),
+      () => verdictLog(pairsDir).write(scored, batchId),
       if (maxBlock > 0L)
-        () => dropped.write.mode(SaveMode.Overwrite)
-          .parquet(s"$pairsDir/__dropped__/batch_id=$batchId")
+        () => verdictLog(s"$pairsDir/__dropped__").write(dropped, batchId)
       else null)
   }
 
   /** Every verdict scored so far (None before the first batch). */
   def verdicts(spark: SparkSession, pairsDir: String): Option[DataFrame] =
-    BatchState.read(spark, pairsDir)
+    verdictLog(pairsDir).read(spark)
 }

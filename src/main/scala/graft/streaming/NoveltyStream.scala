@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -36,6 +36,20 @@ import graft.operators.CorpusGrowth
 object NoveltyStream {
 
   final case class Config(n: Int = 3)
+
+  /** The seen-gram store: distinct union of first-seen batch partitions
+    * (disjoint by construction; the distinct is belt-and-braces for
+    * replayed histories).
+    */
+  private def seen(stateDir: String) =
+    MergeStore(stateDir, MergeStore.FirstSeen(_.select("h").distinct()))
+  private def reportLog(reportDir: String) = MergeStore(reportDir, MergeStore.OutputLog)
+
+  /** Land a batch's first-seen hashes (`freshFirst` of
+    * [[scoreAgainstStore]]) as its partition of the seen-gram store.
+    */
+  private[streaming] def writeSeen(stateDir: String, freshFirst: DataFrame, batchId: Long): Unit =
+    seen(stateDir).write(freshFirst.select("h"), batchId)
 
   /** Score one micro-batch against the store and persist both the
     * per-doc novelty report (`reportDir/batch_id=N`) and the batch's
@@ -94,10 +108,8 @@ object NoveltyStream {
     // checkpoints + the pre-batch store): land them concurrently
     // (guide §2.6); replay overwrites both byte-identical
     graft.operators.Par.actions(
-      () => report.write.mode(SaveMode.Overwrite)
-        .parquet(s"$reportDir/batch_id=$batchId"),
-      () => freshFirst.select("h").write.mode(SaveMode.Overwrite)
-        .parquet(BatchState.batchDir(spark, stateDir, batchId)))
+      () => reportLog(reportDir).write(report, batchId),
+      () => writeSeen(stateDir, freshFirst, batchId))
     // batch-lifetime checkpoints: drop their blocks now, not at
     // stream shutdown — a long-running monitor must not accumulate
     // one batch's worth of blocks per micro-batch
@@ -114,57 +126,35 @@ object NoveltyStream {
       reportDir: String,
       checkpointDir: String,
       cfg: Config = Config()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[_], batchId: Long) =>
-        noveltyBatch(batch.toDF(), idCol, textCol, stateDir, reportDir,
-          cfg, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      noveltyBatch(_, idCol, textCol, stateDir, reportDir, cfg, _)).start()
 
-  /** The seen-gram store (distinct union of batch outputs — disjoint
-    * by construction, the distinct is belt-and-braces for replayed
-    * histories). Empty store yields an empty frame.
+  /** The seen-gram store, without batch `excludeBatchId` when given.
+    * Empty store yields an empty frame.
     */
   def seenHashes(
       spark: SparkSession,
       stateDir: String,
       excludeBatchId: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    BatchState.read(spark, stateDir) match {
-      case None => Seq.empty[Long].toDF("h")
-      case Some(state) =>
-        excludeBatchId
-          .map(id => state.filter(col("batch_id") =!= id))
-          .getOrElse(state)
-          .select("h").distinct()
-    }
+    excludeBatchId.fold(seen(stateDir).merged(spark))(id =>
+      seen(stateDir).merged(spark, _ =!= id))
+      .getOrElse(Seq.empty[Long].toDF("h"))
   }
 
   /** All per-batch reports as one frame (batch_id surfaces as a
     * partition column), or None before the first batch.
     */
-  def reports(spark: SparkSession, reportDir: String): Option[DataFrame] = {
-    val (fs, p) = {
-      val path = new org.apache.hadoop.fs.Path(reportDir)
-      (path.getFileSystem(spark.sessionState.newHadoopConf()), path)
-    }
-    if (!fs.exists(p)) None
-    else Some(spark.read
-      .option("basePath", reportDir).parquet(reportDir))
-  }
+  def reports(spark: SparkSession, reportDir: String): Option[DataFrame] =
+    reportLog(reportDir).read(spark)
 
   /** Fold every batch except the newest into one store partition
     * (distinct union — lossless for a set). The newest batch keeps
     * its own directory so a post-crash replay overwrites only itself
     * (its scoring excludes its own partition, which a fold of the
-    * newest would have merged away — the same reasoning as the
-    * additive stores, [[BatchState.compactExceptNewest]]).
-    * Single-writer: run at most ONE compaction against a store at a
-    * time — the swap protocol tolerates a live stream writer and
-    * crash/recovery, but two concurrent compactors race on the same
-    * rename sequence ([[BatchState.swap]]).
+    * newest would have merged away — the first-seen algebra's
+    * compaction, [[MergeStore.compact]]). Single-writer.
     */
   def compact(spark: SparkSession, stateDir: String): Unit =
-    BatchState.compactExceptNewest(spark, stateDir)(_.select("h").distinct())
+    seen(stateDir).compact(spark)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -35,6 +35,8 @@ import graft.operators.Privacy
   */
 object PrivacyStream {
 
+  private def store(stateDir: String) = MergeStore(stateDir, MergeStore.Sum("__c"))
+
   /** Fold one micro-batch's (quasi × sensitive) counts into the store. */
   def countBatch(
       batch: DataFrame,
@@ -43,10 +45,8 @@ object PrivacyStream {
       stateDir: String,
       batchId: Long): Unit = {
     if (batch.isEmpty) return
-    batch.groupBy((quasiCols :+ sensitiveCol).map(col): _*)
-      .agg(count(lit(1)).as("__c"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(BatchState.batchDir(batch.sparkSession, stateDir, batchId))
+    store(stateDir).write(batch.groupBy((quasiCols :+ sensitiveCol).map(col): _*)
+      .agg(count(lit(1)).as("__c")), batchId)
   }
 
   /** Attach the monitor to a streaming source. */
@@ -56,12 +56,8 @@ object PrivacyStream {
       sensitiveCol: String,
       stateDir: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[_], batchId: Long) =>
-        countBatch(batch.toDF(), quasiCols, sensitiveCol, stateDir, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      countBatch(_, quasiCols, sensitiveCol, stateDir, _)).start()
 
   /** The cumulative (quasi × sensitive) count table — the one frame
     * every report below derives from (None before the first batch).
@@ -71,10 +67,7 @@ object PrivacyStream {
       stateDir: String,
       quasiCols: Seq[String],
       sensitiveCol: String): Option[DataFrame] =
-    BatchState.read(spark, stateDir).map {
-      _.groupBy((quasiCols :+ sensitiveCol).map(col): _*)
-        .agg(sum("__c").as("__c"))
-    }
+    store(stateDir).merged(spark)
 
   def kAnonymity(
       spark: SparkSession, stateDir: String,
@@ -109,14 +102,11 @@ object PrivacyStream {
       .map(Privacy.dpReleaseFromCounts(
         _, quasiCols, epsilon, releaseThreshold, seed, epoch))
 
-  /** Collapse all but the newest batch partition into one
-    * ([[BatchState.compactExceptNewest]] — additive counts merge by
-    * sum). Single-writer, like every compactor here.
+  /** Collapse all but the newest batch partition into one (additive
+    * counts merge by sum). Single-writer, like every compactor here.
     */
   def compact(
       spark: SparkSession, stateDir: String,
       quasiCols: Seq[String], sensitiveCol: String): Unit =
-    BatchState.compactExceptNewest(spark, stateDir)(
-      _.groupBy((quasiCols :+ sensitiveCol).map(col): _*)
-        .agg(sum("__c").as("__c")))
+    store(stateDir).compact(spark)
 }

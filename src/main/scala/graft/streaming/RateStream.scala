@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -27,6 +27,8 @@ import graft.operators.Anomaly
   */
 object RateStream {
 
+  private def store(stateDir: String) = MergeStore(stateDir, MergeStore.Sum("__c"))
+
   /** Fold one micro-batch's (type, hour) counts into the store. */
   def countBatch(
       batch: DataFrame,
@@ -35,11 +37,9 @@ object RateStream {
       stateDir: String,
       batchId: Long): Unit = {
     if (batch.isEmpty) return
-    batch
+    store(stateDir).write(batch
       .groupBy(col(typeCol), date_trunc("hour", col(tsCol)).as("bucket_ts"))
-      .agg(count(lit(1)).as("__c"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(BatchState.batchDir(batch.sparkSession, stateDir, batchId))
+      .agg(count(lit(1)).as("__c")), batchId)
   }
 
   /** Attach the monitor to a streaming source. */
@@ -49,12 +49,8 @@ object RateStream {
       tsCol: String,
       stateDir: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[_], batchId: Long) =>
-        countBatch(batch.toDF(), typeCol, tsCol, stateDir, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      countBatch(_, typeCol, tsCol, stateDir, _)).start()
 
   /** The live control chart over everything streamed so far (None
     * before the first batch).
@@ -64,10 +60,9 @@ object RateStream {
       stateDir: String,
       typeCol: String,
       zThreshold: Double = 3.0): Option[DataFrame] =
-    BatchState.read(spark, stateDir).map { state =>
+    store(stateDir).merged(spark).map { counts =>
       Anomaly.rateAnomalyFromCounts(
-        state.groupBy(col(typeCol), col("bucket_ts"))
-          .agg(sum("__c").as("__c"))
+        counts
           // bucket-space-bounded; the grid/moments/z deriveds each
           // consume it — same one-materialization contract as the
           // batch operator's checkpointed count table
@@ -75,11 +70,9 @@ object RateStream {
         typeCol, zThreshold)
     }
 
-  /** Collapse all but the newest batch partition into one
-    * ([[BatchState.compactExceptNewest]] — additive counts merge by
-    * sum). Single-writer, like every compactor here.
+  /** Collapse all but the newest batch partition into one (additive
+    * counts merge by sum). Single-writer, like every compactor here.
     */
   def compact(spark: SparkSession, stateDir: String, typeCol: String): Unit =
-    BatchState.compactExceptNewest(spark, stateDir)(
-      _.groupBy(col(typeCol), col("bucket_ts")).agg(sum("__c").as("__c")))
+    store(stateDir).compact(spark)
 }

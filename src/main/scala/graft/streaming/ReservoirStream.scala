@@ -32,6 +32,20 @@ object ReservoirStream {
 
   final case class Config(k: Int = 100, seed: Long = 17L)
 
+  /** The merge: candidates deduped on (source, id) — a document seen in
+    * a replayed or overlapping batch contributes one candidacy — and
+    * re-ranked by the same deterministic keys. Max-weight dedup instead
+    * of dropDuplicates: replayed rows are identical either way, but if
+    * a document is RE-SCORED in a later batch the survivor must not
+    * depend on partition order — the best known weight wins,
+    * deterministically.
+    */
+  private def store(stateDir: String, cfg: Config) =
+    MergeStore(stateDir, MergeStore.Semilattice(state =>
+      Sampling.weightedSampleGrouped(
+        state.groupBy("source", "id").agg(max("weight").as("weight")),
+        "source", "id", "weight", cfg.k, cfg.seed)))
+
   /** Reduce one micro-batch to its per-source candidate set (the ≤ k
     * best keys per source) under `stateDir/batch_id=N`. Empty batches
     * write nothing.
@@ -58,8 +72,7 @@ object ReservoirStream {
         .groupBy("source", "id").agg(max("weight").as("weight")),
       "source", "id", "weight", cfg.k, cfg.seed)
       .drop("sample_rank")
-    candidates.write.mode("overwrite")
-      .parquet(BatchState.batchDir(batch.sparkSession, stateDir, batchId))
+    store(stateDir, cfg).write(candidates, batchId)
   }
 
   /** Attach the per-batch reducer to a streaming Dataset. */
@@ -71,13 +84,8 @@ object ReservoirStream {
       stateDir: String,
       checkpointDir: String,
       cfg: Config = Config()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[_], batchId: Long) =>
-        mergeBatch(batch.toDF(), sourceCol, idCol, weightCol,
-          stateDir, cfg, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      mergeBatch(_, sourceCol, idCol, weightCol, stateDir, cfg, _)).start()
 
   /** Collapse the accumulated batch directories into one resolved
     * batch holding the CURRENT reservoir (the k best per source).
@@ -86,39 +94,20 @@ object ReservoirStream {
     * afterwards only sees weights at or after the compaction (an
     * already-EVICTED document's higher historical weight is gone; for
     * retained documents the reservoir keeps their max weight).
-    * Atomic swap via [[BatchState.swap]].
-    * Single-writer: run at most ONE compaction against a store at a
-    * time — the swap protocol tolerates a live stream writer and
-    * crash/recovery, but two concurrent compactors race on the same
-    * rename sequence ([[BatchState.swap]]).
+    * Atomic swap; single-writer ([[MergeStore.compact]]).
     */
   def compact(spark: SparkSession, stateDir: String, cfg: Config = Config()): Unit =
-    BatchState.maxBatchId(spark, stateDir).foreach { maxBatch =>
-      BatchState.swap(spark, stateDir,
-        sample(spark, stateDir, cfg).drop("sample_rank"), maxBatch)
-    }
+    store(stateDir, cfg).compact(spark)
 
-  /** The current reservoir: candidates of all completed batches,
-    * deduped on (source, id) — a document seen in a replayed or
-    * overlapping batch contributes one candidacy — and re-ranked by
-    * the same deterministic keys. Converges exactly to the batch
-    * sample over the union of the batches. Empty (batchless) state
-    * yields an empty frame.
+  /** The current reservoir: the merged candidates of all completed
+    * batches, ranked. Converges exactly to the batch sample over the
+    * union of the batches. Empty (batchless) state yields an empty
+    * frame.
     */
   def sample(spark: SparkSession, stateDir: String, cfg: Config = Config()): DataFrame = {
     import spark.implicits._
-    BatchState.read(spark, stateDir) match {
-      case None =>
-        Seq.empty[(String, Long, Double, Long)]
-          .toDF("source", "id", "weight", "sample_rank")
-      case Some(state) =>
-        // max-weight dedup instead of dropDuplicates: replayed rows are
-        // identical either way, but if a document is RE-SCORED in a
-        // later batch the survivor must not depend on partition order —
-        // the best known weight wins, deterministically
-        Sampling.weightedSampleGrouped(
-          state.groupBy("source", "id").agg(max("weight").as("weight")),
-          "source", "id", "weight", cfg.k, cfg.seed)
-    }
+    store(stateDir, cfg).merged(spark).getOrElse(
+      Seq.empty[(String, Long, Double, Long)]
+        .toDF("source", "id", "weight", "sample_rank"))
   }
 }

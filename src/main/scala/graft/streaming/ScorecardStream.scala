@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -13,7 +13,7 @@ import graft.operators.{CorpusGrowth, Lexicon}
   * nondecreasing doc ids across batches — crawl order, the same
   * parity precondition as [[NoveltyStream]]).
   *
-  * Three stores, each mergeable in the [[BatchState]] contract:
+  * Three stores, each a [[MergeStore]]:
   *
   *   - `grams/` — the [[NoveltyStream]] first-seen gram-hash store
   *     (shared machinery: per-doc novelty is scored here the same
@@ -38,9 +38,13 @@ object ScorecardStream {
   final case class Config(n: Int = 3)
 
   private def gramsDir(root: String) = s"$root/grams"
-  private def fpsDir(root: String) = s"$root/fps"
-  private def sumsDir(root: String) = s"$root/sums"
-  private def langsDir(root: String) = s"$root/langs"
+  /** First owner per fingerprint: argmin by doc. */
+  private def fps(root: String) = MergeStore(s"$root/fps", MergeStore.FirstSeen(
+    _.groupBy("fp").agg(min("first_doc").as("first_doc"),
+      expr("min_by(first_source, first_doc)").as("first_source"))))
+  private def sums(root: String) = MergeStore(s"$root/sums", MergeStore.Sum(
+    "n_docs", "dups", "tok_sum", "ent_sum", "ent_n", "nov_sum", "nov_n"))
+  private def langs(root: String) = MergeStore(s"$root/langs", MergeStore.Sum("n_docs"))
 
   /** Fold one micro-batch into the stores. Directly callable for
     * tests/backfill; replay-safe (each store read excludes the
@@ -101,11 +105,10 @@ object ScorecardStream {
     // feeding partial AND langCounts, plus freshFps) used to each
     // re-read and re-aggregate the whole store per micro-batch
     // (guide §1.2: remove passes).
-    val priorFpSet = (BatchState.read(spark, fpsDir(rootDir)) match {
-      case None => Seq.empty[String].toDF("fp")
-      case Some(state) => state.filter(col("batch_id") =!= batchId)
-        .select("fp").distinct()
-    }).localCheckpoint()
+    val priorFpSet = fps(rootDir).read(spark, _ =!= batchId)
+      .map(_.select("fp").distinct())
+      .getOrElse(Seq.empty[String].toDF("fp"))
+      .localCheckpoint()
     val batchFirst = slim.groupBy("__fp")
       .agg(min("doc_id").as("__bfirst"))
     // the dup flag feeds TWO store writes (partial and langCounts):
@@ -157,14 +160,10 @@ object ScorecardStream {
     // only submitted after all three returned, preserving the crash
     // contract above
     graft.operators.Par.actions(
-      () => freshFirst.select("h").write.mode(SaveMode.Overwrite)
-        .parquet(BatchState.batchDir(spark, gramsDir(rootDir), batchId)),
-      () => freshFps.write.mode(SaveMode.Overwrite)
-        .parquet(BatchState.batchDir(spark, fpsDir(rootDir), batchId)),
-      () => langCounts.write.mode(SaveMode.Overwrite)
-        .parquet(BatchState.batchDir(spark, langsDir(rootDir), batchId)))
-    partial.write.mode(SaveMode.Overwrite)
-      .parquet(BatchState.batchDir(spark, sumsDir(rootDir), batchId))
+      () => NoveltyStream.writeSeen(gramsDir(rootDir), freshFirst, batchId),
+      () => fps(rootDir).write(freshFps, batchId),
+      () => langs(rootDir).write(langCounts, batchId))
+    sums(rootDir).write(partial, batchId)
     graft.operators.SimilaritySearch.dropCheckpointBlocks(freshFirst)
     graft.operators.SimilaritySearch.dropCheckpointBlocks(flagged)
     graft.operators.SimilaritySearch.dropCheckpointBlocks(priorFpSet)
@@ -181,13 +180,8 @@ object ScorecardStream {
       rootDir: String,
       checkpointDir: String,
       cfg: Config = Config()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[_], batchId: Long) =>
-        scorecardBatch(batch.toDF(), idCol, sourceCol, langCol, textCol,
-          rootDir, cfg, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      scorecardBatch(_, idCol, sourceCol, langCol, textCol, rootDir, cfg, _)).start()
 
   /** The fingerprint first-owner store, argmin-resolved (disjoint by
     * construction; the `min_by` fold keeps a replayed or compacted
@@ -198,17 +192,9 @@ object ScorecardStream {
       rootDir: String,
       excludeBatchId: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    BatchState.read(spark, fpsDir(rootDir)) match {
-      case None =>
-        Seq.empty[(String, Long, String)].toDF("fp", "first_doc", "first_source")
-      case Some(state) =>
-        excludeBatchId
-          .map(id => state.filter(col("batch_id") =!= id))
-          .getOrElse(state)
-          .groupBy("fp")
-          .agg(min("first_doc").as("first_doc"),
-            expr("min_by(first_source, first_doc)").as("first_source"))
-    }
+    val store = fps(rootDir)
+    excludeBatchId.fold(store.merged(spark))(id => store.merged(spark, _ =!= id))
+      .getOrElse(Seq.empty[(String, Long, String)].toDF("fp", "first_doc", "first_source"))
   }
 
   /** The LIVE scorecard — one row per source, the same eight columns
@@ -216,16 +202,12 @@ object ScorecardStream {
     * delivered batches. None before the first batch.
     */
   def scorecard(spark: SparkSession, rootDir: String): Option[DataFrame] =
-    BatchState.read(spark, sumsDir(rootDir)).map { sums =>
+    sums(rootDir).merged(spark).map { summed =>
       import spark.implicits._
-      val perSource = sums.groupBy("source").agg(
-        sum("n_docs").as("n_docs"),
-        sum("dups").as("__dups"),
-        sum("tok_sum").as("n_tokens"),
-        sum("ent_sum").as("__ents"),
-        sum("ent_n").as("__entn"),
-        sum("nov_sum").as("__novs"),
-        sum("nov_n").as("__novn"))
+      val perSource = summed.select(col("source"), col("n_docs"),
+        col("dups").as("__dups"), col("tok_sum").as("n_tokens"),
+        col("ent_sum").as("__ents"), col("ent_n").as("__entn"),
+        col("nov_sum").as("__novs"), col("nov_n").as("__novn"))
       // sums/ commits last, so langs/ may be ONE batch ahead (a crash
       // between the supporting writes and the sums commit, or a reader
       // racing a live batch): clamp the lang counts to batches the
@@ -234,14 +216,11 @@ object ScorecardStream {
       // membership) stays correct mid-compaction, where folded
       // partitions carry older ids than their content. A store
       // mid-repair degrades to null purity instead of throwing.
-      val sumsMax = BatchState.committedBatchIds(spark, sumsDir(rootDir))
-        .lastOption.getOrElse(Long.MinValue)
-      val langTop = BatchState.read(spark, langsDir(rootDir))
-        .map(_.filter(col("batch_id") <= sumsMax))
+      val sumsMax = sums(rootDir).newest(spark).getOrElse(Long.MinValue)
+      val langTop = langs(rootDir).merged(spark, _ <= sumsMax)
         .getOrElse(Seq.empty[(String, String, Long)]
           .toDF("source", "lang", "n_docs"))
-        .groupBy("source", "lang").agg(sum("n_docs").as("__c"))
-        .groupBy("source").agg(max("__c").as("__top"))
+        .groupBy("source").agg(max("n_docs").as("__top"))
       val total = perSource.agg(sum("n_tokens").as("__tot"))
       perSource
         .join(broadcast(langTop), Seq("source"), "left")
@@ -261,24 +240,12 @@ object ScorecardStream {
   /** Compact all four stores (each with its own merge — distinct
     * union, argmin, addition, addition). Every batch except the
     * newest folds, so post-crash replays stay self-contained
-    * ([[BatchState.compactExceptNewest]]).
-    * Single-writer: run at most ONE compaction against a store at a
-    * time — the swap protocol tolerates a live stream writer and
-    * crash/recovery, but two concurrent compactors race on the same
-    * rename sequence ([[BatchState.swap]]).
+    * ([[MergeStore.compact]]). Single-writer.
     */
   def compact(spark: SparkSession, rootDir: String): Unit = {
     NoveltyStream.compact(spark, gramsDir(rootDir))
-    BatchState.compactExceptNewest(spark, fpsDir(rootDir))(
-      _.groupBy("fp").agg(min("first_doc").as("first_doc"),
-        expr("min_by(first_source, first_doc)").as("first_source")))
-    BatchState.compactExceptNewest(spark, sumsDir(rootDir))(
-      _.groupBy("source").agg(
-        sum("n_docs").as("n_docs"), sum("dups").as("dups"),
-        sum("tok_sum").as("tok_sum"), sum("ent_sum").as("ent_sum"),
-        sum("ent_n").as("ent_n"), sum("nov_sum").as("nov_sum"),
-        sum("nov_n").as("nov_n")))
-    BatchState.compactExceptNewest(spark, langsDir(rootDir))(
-      _.groupBy("source", "lang").agg(sum("n_docs").as("n_docs")))
+    fps(rootDir).compact(spark)
+    sums(rootDir).compact(spark)
+    langs(rootDir).compact(spark)
   }
 }

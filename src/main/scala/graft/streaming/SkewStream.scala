@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -26,6 +26,8 @@ import graft.operators.Skew
   */
 object SkewStream {
 
+  private def store(stateDir: String) = MergeStore(stateDir, MergeStore.Sum("__cnt"))
+
   /** Fold one micro-batch's key counts into the store. */
   def countBatch(
       batch: DataFrame,
@@ -33,9 +35,8 @@ object SkewStream {
       stateDir: String,
       batchId: Long): Unit = {
     if (batch.isEmpty) return
-    batch.groupBy(col(keyCol).as("key")).agg(count(lit(1)).as("__cnt"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(BatchState.batchDir(batch.sparkSession, stateDir, batchId))
+    store(stateDir).write(
+      batch.groupBy(col(keyCol).as("key")).agg(count(lit(1)).as("__cnt")), batchId)
   }
 
   /** Attach the monitor to a streaming source. */
@@ -44,12 +45,8 @@ object SkewStream {
       keyCol: String,
       stateDir: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[_], batchId: Long) =>
-        countBatch(batch.toDF(), keyCol, stateDir, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      countBatch(_, keyCol, stateDir, _)).start()
 
   /** The live report over everything streamed so far (None before the
     * first batch). `keyName` labels the report's `key` column — pass
@@ -60,17 +57,12 @@ object SkewStream {
       stateDir: String,
       keyName: String,
       partitions: Int = 32): Option[DataFrame] =
-    BatchState.read(spark, stateDir).map { state =>
-      Skew.reportFromCounts(
-        state.groupBy("key").agg(sum("__cnt").as("__cnt")),
-        keyName, partitions)
-    }
+    store(stateDir).merged(spark).map(
+      Skew.reportFromCounts(_, keyName, partitions))
 
-  /** Collapse all but the newest batch partition into one
-    * ([[BatchState.compactExceptNewest]] — additive counts merge by
-    * sum). Single-writer, like every compactor here.
+  /** Collapse all but the newest batch partition into one (additive
+    * counts merge by sum). Single-writer, like every compactor here.
     */
   def compact(spark: SparkSession, stateDir: String): Unit =
-    BatchState.compactExceptNewest(spark, stateDir)(
-      _.groupBy("key").agg(sum("__cnt").as("__cnt")))
+    store(stateDir).compact(spark)
 }

@@ -67,18 +67,14 @@ object StreamingDedup {
       shingleSize: Int = 3,
       bands: Int = 8,
       maxBucket: Int = 1000)(batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.Dedup
-    val spark = batch.sparkSession
-    // BatchState probes through the Hadoop FS API: java.io.File would
-    // silently report "missing" for any non-local store (hdfs://,
-    // s3a://, ...) and every batch would dedup against an empty corpus
-    val store = BatchState.read(spark, storeDir) match {
-      case Some(state) =>
-        state.filter(col("batch_id") < batchId).select("id", "band")
-      case None =>
-        Dedup.bandSignatures(
-          batch.limit(0), textCol, idCol, numHashes, shingleSize, bands)
-    }
+    import graft.operators.{Blocks, Dedup}
+    // ids are globally unique, so each signature lands once: a
+    // first-seen store read strictly below this batch
+    val sigStore = MergeStore(storeDir, MergeStore.FirstSeen(identity))
+    val store = sigStore.merged(batch.sparkSession, _ < batchId)
+      .map(_.select("id", "band"))
+      .getOrElse(Dedup.bandSignatures(
+        batch.limit(0), textCol, idCol, numHashes, shingleSize, bands))
     val sigs = Dedup.bandSignatures(
       batch, textCol, idCol, numHashes, shingleSize, bands)
       .localCheckpoint(false)
@@ -89,12 +85,12 @@ object StreamingDedup {
     // alone): land them concurrently (guide §2.6) — replay overwrites
     // all three byte-identical, so no write orders another
     graft.operators.Par.actions(
-      () => pairs.write.mode("overwrite")
-        .parquet(s"$pairsDir/batch_id=$batchId"),
-      () => dropped.write.mode("overwrite")
-        .parquet(s"$pairsDir/__dropped__/batch_id=$batchId"),
-      () => sigs.write.mode("overwrite")
-        .parquet(s"$storeDir/batch_id=$batchId"))
+      () => MergeStore(pairsDir, MergeStore.OutputLog).write(pairs, batchId),
+      () => MergeStore(s"$pairsDir/__dropped__", MergeStore.OutputLog).write(dropped, batchId),
+      () => sigStore.write(sigs, batchId))
+    // all three writes have finished: the batch's signature anchor is
+    // superseded
+    Blocks.drop(sigs)
   }
 
   /** Attach dedup signatures on ingest: exact fingerprint, simhash, and

@@ -36,6 +36,9 @@ object StreamingSketch {
       confidence: Double = 0.99,
       seed: Int = 17)
 
+  /** One sketch blob per batch; [[merged]] folds them on the driver. */
+  private def store(stateDir: String) = MergeStore(stateDir, MergeStore.OutputLog)
+
   /** Reduce one micro-batch into a single (sketch, n) row under
     * `stateDir/batch_id=N`. Empty batches write nothing.
     */
@@ -57,10 +60,8 @@ object StreamingSketch {
     // proportional to non-empty batches (an all-null batch would
     // otherwise add a counter-less sketch blob per trigger)
     if (!row.isNullAt(0) && row.getLong(1) > 0L) {
-      Seq((row.getAs[Array[Byte]](0), row.getLong(1)))
-        .toDF("sketch", "n")
-        .write.mode("overwrite")
-        .parquet(s"$stateDir/batch_id=$batchId")
+      store(stateDir).write(
+        Seq((row.getAs[Array[Byte]](0), row.getLong(1))).toDF("sketch", "n"), batchId)
     }
   }
 
@@ -71,19 +72,15 @@ object StreamingSketch {
       stateDir: String,
       checkpointDir: String,
       cfg: Config = Config()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[_], batchId: Long) =>
-        mergeBatch(batch.toDF(), itemCol, stateDir, cfg, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      mergeBatch(_, itemCol, stateDir, cfg, _)).start()
 
   /** The merged sketch and total item count across all completed
     * batches; None before the first non-empty batch. Driver cost:
     * B sketch blobs, KBs each.
     */
   def merged(spark: SparkSession, stateDir: String): Option[(CountMinSketch, Long)] = {
-    val state = BatchState.read(spark, stateDir).getOrElse(return None)
+    val state = store(stateDir).read(spark).getOrElse(return None)
     val rows = state.select("sketch", "n").collect()
     if (rows.isEmpty) return None
     val sketches = rows.map(r =>

@@ -34,7 +34,7 @@ import graft.scd.TrainingCorpusJob
   *     "finalized" early decision would diverge from the batch truth.
   *
   * State and output are parquet under `outDir`: the doc state is a
-  * per-batch [[BatchState]] store (`batch_id=N` directories — each
+  * first-seen [[MergeStore]] (one directory per batch — each
   * micro-batch persists ONLY its first-seen rows, so the state write
   * is O(batch), never an O(corpus) rewrite), and the corpus is
   * replaced through [[AtomicDir]] — a crash between batches leaves
@@ -69,7 +69,11 @@ object TrainingCorpusStreaming {
       maxBucket: Int = 1000,
       partitionedCorpus: Boolean = false)
 
-  private val docStateName = "doc_state"
+  /** First delivery of a doc_id wins; each batch holds only its
+    * first-seen rows.
+    */
+  private def docState(outDir: String) =
+    MergeStore(s"$outDir/doc_state", MergeStore.FirstSeen(identity))
   private val corpusFpsName = "corpus_fps"
   private val corpusName = "corpus"
 
@@ -96,7 +100,7 @@ object TrainingCorpusStreaming {
     // vanishes until the next one.
     val fs = new Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    BatchState.recover(spark, s"$outDir/$docStateName")
+    docState(outDir).recover(spark)
     AtomicDir.recover(fs, new Path(s"$outDir/$corpusName"))
     // The benchmark's distinct shingle hashes are computed ONCE, here
     // — not per micro-batch: the eval corpus is static for the life
@@ -114,13 +118,8 @@ object TrainingCorpusStreaming {
       .option("columnNameOfCorruptRecord", JsonLines.CorruptCol)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(inputDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, benchHashes, outDir, cfg, batchId)
-      }
-      .start()
+    MergeStore.foreachBatch(stream, checkpointDir)(
+      mergeBatch(_, benchHashes, outDir, cfg, _)).trigger(trigger).start()
   }
 
   /** One micro-batch: quarantine split → per-doc enrichment of the new
@@ -159,10 +158,9 @@ object TrainingCorpusStreaming {
     // second copy of the same corrupt lines (mode("append") here was
     // the one non-idempotent write in an otherwise replay-safe merge)
     if (nBad > 0)
-      rows.filter(col(JsonLines.CorruptCol).isNotNull)
-        .select(col(JsonLines.CorruptCol).as("raw_line"))
-        .write.mode("overwrite")
-        .parquet(s"$outDir/quarantine/batch_id=$batchId")
+      MergeStore(s"$outDir/quarantine", MergeStore.OutputLog).write(
+        rows.filter(col(JsonLines.CorruptCol).isNotNull)
+          .select(col(JsonLines.CorruptCol).as("raw_line")), batchId)
 
     val incoming = rows
       .filter(col(JsonLines.CorruptCol).isNull &&
@@ -186,20 +184,17 @@ object TrainingCorpusStreaming {
         redacted.as("text_redacted"),
         TextFunctions.qualityScore(redacted).as("quality"))
 
-    // Per-batch state store ([[BatchState]], the StreamingDedup
-    // pattern): each batch persists ONLY its first-seen rows under
-    // `batch_id=N`, so the per-batch state write is O(batch), not
+    // Per-batch state store (the StreamingDedup pattern): each batch
+    // persists ONLY its first-seen rows in its own directory, so the
+    // per-batch state write is O(batch), not
     // O(corpus) — at 100 TB the full-state rewrite was the dominant
     // IO term of every micro-batch. Replay-safe by the same partition
     // contract as the dedup store: the prev read takes strictly
     // earlier batches, so a redelivered batch sees exactly the
     // pre-batch state and overwrites its own directory byte-identical.
-    val statePath = s"$outDir/$docStateName"
-    val prev = BatchState.read(spark, statePath) match {
-      case Some(st) => st.filter(col("batch_id") < batchId).drop("batch_id")
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], enriched.schema)
-    }
+    val state = docState(outDir)
+    val prev = state.merged(spark, _ < batchId).getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], enriched.schema))
 
     // state merge: first delivery of a doc_id wins (re-deliveries are
     // replays of the same immutable document). No broadcast hint: the
@@ -209,8 +204,7 @@ object TrainingCorpusStreaming {
       .join(prev.select(col("doc_id").as("p_id")),
         col("doc_id") === col("p_id"), "left_anti")
       .localCheckpoint(true)
-    newRows.write.mode("overwrite")
-      .parquet(BatchState.batchDir(spark, statePath, batchId))
+    state.write(newRows, batchId)
     // the resolution view stays LAZY: prev is a partition-pruned,
     // column-prunable parquet scan — an O(corpus) in-memory
     // materialization here would just move the rewritten-state cost

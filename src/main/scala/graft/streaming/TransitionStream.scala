@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.EventFlow
@@ -29,6 +29,10 @@ import graft.operators.EventFlow
   */
 object TransitionStream {
 
+  private def pairs(pairsDir: String) = MergeStore(pairsDir, MergeStore.Sum("n_trans"))
+  private def lasts(lastDir: String) =
+    MergeStore(lastDir, MergeStore.LatestWins(Seq("user"), Seq("ts", "tie")))
+
   /** The foreachBatch body (directly callable for tests/backfill).
     * Writes `pairsDir/batch_id=N` (pair counts) and
     * `lastDir/batch_id=N` (per-user last event of this batch).
@@ -47,11 +51,9 @@ object TransitionStream {
 
     // boundary pairs: carried last event (batches < N, latest wins by
     // (ts, tie) — struct max is lexicographic) -> first event of N
-    val carried = BatchState.read(spark, lastDir).map(
-      _.filter(col("batch_id") < batchId)
-        .groupBy("user")
-        .agg(max(struct(col("ts"), col("tie"), col("etype"))).as("__l"))
-        .select(col("user"), col("__l.etype").as("prev_type")))
+    val last = lasts(lastDir)
+    val carried = last.merged(spark, _ < batchId).map(
+      _.select(col("user"), col("etype").as("prev_type")))
     val firsts = evs.groupBy("user")
       .agg(min(struct(col("ts"), col("tie"), col("etype"))).as("__f"))
       .select(col("user"), col("__f.etype").as("next_type"))
@@ -64,17 +66,11 @@ object TransitionStream {
     // pruned) and the last-event write only this batch's events, so
     // the two land concurrently (guide §2.6); replay overwrites both
     graft.operators.Par.actions(
-      () => boundary.foldLeft(inBatch)(_ unionByName _)
+      () => pairs(pairsDir).write(boundary.foldLeft(inBatch)(_ unionByName _)
         .groupBy("prev_type", "next_type")
-        .agg(sum("n_trans").as("n_trans"))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(BatchState.batchDir(spark, pairsDir, batchId)),
-      () => evs.groupBy("user")
-        .agg(max(struct(col("ts"), col("tie"), col("etype"))).as("__l"))
-        .select(col("user"), col("__l.ts").as("ts"),
-          col("__l.tie").as("tie"), col("__l.etype").as("etype"))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(BatchState.batchDir(spark, lastDir, batchId)))
+        .agg(sum("n_trans").as("n_trans")), batchId),
+      // the batch's own per-user last event: the store's merge over it
+      () => last.write(last.algebra.merge(evs), batchId))
   }
 
   /** Wire the monitor onto a streaming event source. */
@@ -82,46 +78,32 @@ object TransitionStream {
       events: DataFrame, userCol: String, tsCol: String,
       typeCol: String, tieCol: String,
       pairsDir: String, lastDir: String, checkpointDir: String) =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(
-        transitionBatch(userCol, tsCol, typeCol, tieCol, pairsDir, lastDir) _)
+    MergeStore.foreachBatch(events, checkpointDir)(
+      transitionBatch(userCol, tsCol, typeCol, tieCol, pairsDir, lastDir))
 
   /** The live matrix over the cumulative pair-count store — equals
     * [[EventFlow.transitions]] over the union of batches 0..N under
     * the per-user-ordered arrival contract.
     */
   def matrix(spark: SparkSession, pairsDir: String): DataFrame =
-    BatchState.read(spark, pairsDir) match {
+    pairs(pairsDir).merged(spark) match {
       case None =>
         import spark.implicits._
         Seq.empty[(String, String, Long, Double, Double)]
           .toDF("prev_type", "next_type", "n_trans", "p_cond", "pmi")
-      case Some(state) =>
-        EventFlow.matrixFromCounts(
-          state.groupBy("prev_type", "next_type")
-            .agg(sum("n_trans").as("n_trans")))
+      case Some(counts) => EventFlow.matrixFromCounts(counts)
     }
 
   /** Compact both stores (atomic swap; lossless: pair counts merge by
     * sum, last-events resolve latest-wins). Every batch EXCEPT the
     * newest folds into one resolved partition; the newest batch keeps
-    * its own `batch_id` directory ([[BatchState.swap]] re-attaches
-    * ids above the keep id), so a post-crash REPLAY of that batch —
-    * the one delivery Structured Streaming may repeat — overwrites
-    * only its own partition instead of erasing the merged history.
-    * Single-writer: run at most ONE compaction against a store at a
-    * time — the swap protocol tolerates a live stream writer and
-    * crash/recovery, but two concurrent compactors race on the same
-    * rename sequence ([[BatchState.swap]]).
+    * its own directory, so a post-crash REPLAY of that batch — the one
+    * delivery Structured Streaming may repeat — overwrites only its own
+    * partition instead of erasing the merged history. Single-writer
+    * ([[MergeStore.compact]]).
     */
   def compact(spark: SparkSession, pairsDir: String, lastDir: String): Unit = {
-    BatchState.compactExceptNewest(spark, pairsDir)(
-      _.groupBy("prev_type", "next_type").agg(sum("n_trans").as("n_trans")))
-    BatchState.compactExceptNewest(spark, lastDir)(
-      _.groupBy("user")
-        .agg(max(struct(col("ts"), col("tie"), col("etype"))).as("__l"))
-        .select(col("user"), col("__l.ts").as("ts"),
-          col("__l.tie").as("tie"), col("__l.etype").as("etype")))
+    pairs(pairsDir).compact(spark)
+    lasts(lastDir).compact(spark)
   }
 }

@@ -89,7 +89,7 @@ class NoveltyStreamSpec extends SparkSpec {
       NoveltyStream.noveltyBatch(b, "doc_id", "text", store, reports,
         NoveltyStream.Config(), i.toLong)
     }
-    val all = graft.streaming.BatchState.read(spark, store).get
+    val all = graft.streaming.MergeStore(store, graft.streaming.MergeStore.OutputLog).read(spark).get
       .select("h").as[Long].collect().toSeq
     assert(all.length === all.distinct.length,
       "a gram hash stored twice doubles the store for nothing")

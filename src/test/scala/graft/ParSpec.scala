@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.Par
 
 /** The concurrent-action helper under the micro-batch store fan-outs:
@@ -11,7 +13,7 @@ import graft.operators.Par
   * order is the one rethrown, and null slots (conditionally absent
   * writes) are skipped.
   */
-class ParSpec extends org.scalatest.funsuite.AnyFunSuite {
+class ParSpec extends SparkSpec {
 
   test("runs every body concurrently and returns after all complete") {
     val started = new java.util.concurrent.CountDownLatch(3)
@@ -84,5 +86,50 @@ class ParSpec extends org.scalatest.funsuite.AnyFunSuite {
     // only way out — a detached body would still be mid-spin here)
     assert(bodyDone.get() == 2,
       s"bodies must not outlive the call: ${bodyDone.get()} of 2 done")
+  }
+
+  test("an interrupted caller cancels the Spark jobs its bodies started") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val tag = new java.util.concurrent.atomic.AtomicReference[String](null)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val ended = new java.util.concurrent.ConcurrentHashMap[Int, JobResult]()
+    val running = new java.util.concurrent.CountDownLatch(2)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .flatMap(_.split(",").find(_.startsWith("graft-par-")))
+          .foreach { t => tag.set(t); started.add(e.jobId); running.countDown() }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        ended.put(e.jobId, e.jobResult): Unit
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      // two minutes per task unless the task thread is interrupted
+      val slow: () => Unit = () =>
+        sc.parallelize(1 to 2, 2).foreach(_ => Thread.sleep(120000L))
+      val caller = new Thread(() =>
+        try Par.actions(slow, slow) catch { case _: Throwable => () })
+      caller.start()
+      assert(running.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "both bodies' jobs must start under the call's tag")
+      caller.interrupt()
+      caller.join(60000)
+      assert(!caller.isAlive, "caller must return")
+      // well inside the tasks' two-minute sleep
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def allEnded = started.asScala.forall(ended.containsKey)
+      def active = sc.statusTracker.getJobIdsForTag(tag.get()).toSeq
+        .flatMap(sc.statusTracker.getJobInfo(_))
+        .filter(_.status == org.apache.spark.JobExecutionStatus.RUNNING)
+      while ((!allEnded || active.nonEmpty) && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      assert(allEnded, s"jobs still running after the call returned: $started")
+      started.asScala.foreach { id =>
+        assert(ended.get(id).isInstanceOf[JobFailed], s"job $id must end cancelled")
+      }
+      assert(active.isEmpty, s"no active job may carry the call's tag: $active")
+    } finally sc.removeSparkListener(listener)
   }
 }
