@@ -549,8 +549,33 @@ object SimilaritySearch {
     (probes, pn, pe)
   }
 
+  /** The anchors a graph walk owns from its prologue on: the probe
+    * checkpoint, plus each pruned frame that [[nswProbesAndPrune]]
+    * materialized (an unpruned frame is the caller's index, which the
+    * search must not free). The walk appends its own checkpoints.
+    */
+  private def searchAnchors(probes: DataFrame, c: DataFrame,
+      nodes: DataFrame, prunedEdges: DataFrame, edges: DataFrame)
+      : scala.collection.mutable.ArrayBuffer[DataFrame] =
+    scala.collection.mutable.ArrayBuffer(probes) ++
+      Seq(c).filter(_ ne nodes) ++ Seq(prunedEdges).filter(_ ne edges)
+
+  /** Materialize a graph walk's top-k on the driver (at most k rows
+    * per query) and free every anchor the walk made, so a search
+    * leaves the block manager as it found it: nothing reads the
+    * anchors once the result is collected.
+    */
+  private def collectAndDrop(out: DataFrame, anchors: Seq[DataFrame])
+      : DataFrame = {
+    val rows = try out.collect() finally anchors.foreach(Blocks.drop)
+    out.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      out.schema)
+  }
+
   /** Search a pre-built NSW index (reuse across query batches); same
-    * contract and trajectory as [[nswTopK]].
+    * contract and trajectory as [[nswTopK]]. The top-k comes back
+    * collected (a driver-local frame) and the walk's own anchors are
+    * freed before it returns.
     */
   def nswSearchIndex(
       queries: DataFrame,
@@ -569,6 +594,7 @@ object SimilaritySearch {
     // ---- search: probe the nprobe nearest cells, walk each graph
     val (probes, c, prunedEdges) = nswProbesAndPrune(
       queries, nodes, edges, idCol, vecCol, model, nprobe, entryBits)
+    val anchors = searchAnchors(probes, c, nodes, prunedEdges, edges)
     // entry per (query, probed shard): Hamming-nearest stored sketch
     // (ties on the smaller id) — one equi-join on the cell and a
     // popcount per (query, member) pair, no dot products
@@ -583,6 +609,7 @@ object SimilaritySearch {
       .filter(col("rn") === 1)
       .select(col("query_id"), col("bucket"), col("node"))
       .localCheckpoint()
+    anchors += frontier
     var visited = frontier
     val wBeam = Window.partitionBy("query_id", "bucket")
       .orderBy(col("sim").desc, col("node"))
@@ -600,8 +627,8 @@ object SimilaritySearch {
     // — each round adds one tiny, query-bounded checkpointed leaf and
     // never a materialization job of its own, so the walk costs ONE
     // job per round (the frontier checkpoint) instead of two; the
-    // frontier blocks stay alive for the union and free at session GC
-    // with the other index checkpoints.
+    // frontier blocks stay alive for the union and are freed with the
+    // search's other anchors once the result is collected.
     var round_ = 0
     while (round_ < rounds) {
       val expanded = prunedEdges
@@ -621,13 +648,14 @@ object SimilaritySearch {
         .filter(col("rn") <= beam)
         .select("query_id", "bucket", "node")
         .localCheckpoint()
+      anchors += frontier
       visited = visited.unionByName(frontier)
       round_ += 1
     }
     // ---- exact re-rank of everything visited (across probed shards)
     val wTop = Window.partitionBy("query_id")
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    nodeVecs
+    collectAndDrop(nodeVecs
       .join(broadcast(visited), Seq("bucket", "node"))
       .join(broadcast(probes.select("query_id", "q_vec").distinct()),
         Seq("query_id"))
@@ -637,10 +665,7 @@ object SimilaritySearch {
       .distinct()
       .withColumn("rank", row_number().over(wTop))
       .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos_sim", "rank")
-    // `visited`/`edges`/`probes` checkpoint blocks stay alive for the
-    // returned (lazy) frame; they free at session GC — callers looping
-    // over many nswTopK calls should materialize between calls
+      .select("query_id", "neighbor_id", "cos_sim", "rank"), anchors.toSeq)
   }
 
   /** Deterministic HNSW layer assignment: node `id` lives on layers
@@ -737,6 +762,8 @@ object SimilaritySearch {
     * join broadcasts the query-bounded side, exactly like the nsw path.
     * Deterministic: 6-dp sims, id tie-breaks, sha-256 sketches and
     * layer draws — the full walk is DuckDB-replayable (q_simsearch_hnsw).
+    * Like [[nswSearchIndex]], the top-k comes back collected and the
+    * walk's own anchors are freed before it returns.
     */
   def hnswSearchIndex(
       queries: DataFrame,
@@ -758,6 +785,7 @@ object SimilaritySearch {
     require(entryBits >= 1 && entryBits <= 62)
     val (probes, c, prunedEdges) = nswProbesAndPrune(
       queries, nodes, edges, idCol, vecCol, model, nprobe, entryBits)
+    val anchors = searchAnchors(probes, c, nodes, prunedEdges, edges)
     val nodeVecs = c.select(col("bucket"), col("neighbor_id").as("node"),
       col("c_vec"))
     def score(fr: DataFrame): DataFrame = nodeVecs
@@ -779,6 +807,7 @@ object SimilaritySearch {
       .filter(col("rn") === 1)
       .select(col("query_id"), col("bucket"), col("node"))
     var frontier = score(entry).localCheckpoint()
+    anchors += frontier
     // `visited` is EVERYTHING EVER SCORED, with its sim: beam losers
     // cost their dot product regardless, so discarding them from the
     // answer pool (what a frontier-only re-rank does) throws recall
@@ -804,6 +833,7 @@ object SimilaritySearch {
         .join(broadcast(visited.select("query_id", "bucket", "node")),
           Seq("query_id", "bucket", "node"), "left_anti")
       val stepped = score(expanded).localCheckpoint()
+      anchors += stepped
       frontier = frontier.unionByName(stepped)
         .withColumn("rn", row_number().over(wBeam))
         .filter(col("rn") <= beamUpper)
@@ -822,6 +852,7 @@ object SimilaritySearch {
         .join(broadcast(visited.select("query_id", "bucket", "node")),
           Seq("query_id", "bucket", "node"), "left_anti")
       val stepped = score(expanded).localCheckpoint()
+      anchors += stepped
       frontier = stepped
         .withColumn("rn", row_number().over(wBeam))
         .filter(col("rn") <= beam)
@@ -834,14 +865,14 @@ object SimilaritySearch {
     // plus one per-query sort — no second scoring pass
     val wTop = Window.partitionBy("query_id")
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    visited
+    collectAndDrop(visited
       .filter(col("query_id") =!= col("node"))
       .select(col("query_id"), col("node").as("neighbor_id"),
         col("sim").as("cos_sim"))
       .distinct()
       .withColumn("rank", row_number().over(wTop))
       .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos_sim", "rank")
+      .select("query_id", "neighbor_id", "cos_sim", "rank"), anchors.toSeq)
   }
 
   /** One-shot HNSW: [[hnswIndex]] + [[hnswSearchIndex]]. */

@@ -5,7 +5,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{
   And, Attribute, AttributeReference, Cast, EqualNullSafe, EqualTo,
@@ -829,6 +829,9 @@ object VersionedTable {
     None
   }
 
+  /** Serializes [[stage]]'s scoped `outputTimestampType` override. */
+  private object TsConfLock
+
   private def stage(df: DataFrame, root: String,
       partitionBy: Seq[String] = Nil,
       colMap: Map[String, String] = Map.empty,
@@ -850,23 +853,31 @@ object VersionedTable {
     // MICROS is the exact unix_micros domain the manifest encodes and
     // every engine reads; scoped set/restore because the conf is
     // session-level (a concurrent foreign write observing MICROS for
-    // the window writes identical values in a saner encoding).
+    // the window writes identical values in a saner encoding). The
+    // set, the write and the restore hold [[TsConfLock]] together:
+    // without it a concurrent commit's restore could put INT96 back in
+    // the middle of this write.
     val tsKey = "spark.sql.parquet.outputTimestampType"
     val hasTs = df.schema.exists(_.dataType == TimestampType)
-    val tsPrev = if (hasTs) spark.conf.getOption(tsKey) else None
-    if (hasTs) spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-    try labeled(spark, s"graft: stage write $stageRel") {
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .parquet(stageP.toString)
-    }
-    catch {
-      case e: Throwable if constraintCause(e).isDefined =>
-        f.delete(stageP, true)
-        throw new ConstraintViolationException(constraintCause(e).get)
-    }
-    finally if (hasTs) tsPrev match {
-      case Some(v) => spark.conf.set(tsKey, v)
-      case None => spark.conf.unset(tsKey)
+    def write(): Unit =
+      try labeled(spark, s"graft: stage write $stageRel") {
+        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+          .parquet(stageP.toString)
+      }
+      catch {
+        case e: Throwable if constraintCause(e).isDefined =>
+          f.delete(stageP, true)
+          throw new ConstraintViolationException(constraintCause(e).get)
+      }
+    if (!hasTs) write()
+    else TsConfLock.synchronized {
+      val tsPrev = spark.conf.getOption(tsKey)
+      spark.conf.set(tsKey, "TIMESTAMP_MICROS")
+      try write()
+      finally tsPrev match {
+        case Some(v) => spark.conf.set(tsKey, v)
+        case None => spark.conf.unset(tsKey)
+      }
     }
     val prefix = f.makeQualified(stageP).toString + "/"
     val it = f.listFiles(stageP, true)
@@ -2811,14 +2822,28 @@ object VersionedTable {
     *      are never opened (on a key-clustered table a trickle batch
     *      touches O(batch) files).
     *   2. **Touch**: a semi join of the surviving candidate files
-    *      against the distinct source keys finds the files that
-    *      actually CONTAIN a matched key (driver-bounded: one row per
-    *      candidate file). Untouched files carry into the new version
-    *      as-is — their stats, bytes and bloom entries never move.
-    *   3. **Rewrite**: touched files are rewritten to survivors (rows
-    *      whose key is not in the source) plus updates; inserts are
-    *      source rows whose key appears in NO touched file. One staged
-    *      write carries all three.
+    *      against the source keys finds the files that actually
+    *      CONTAIN a matched key. Each partition dedupes its file names
+    *      and the driver dedupes the rest, so the driver receives at
+    *      most one row per candidate file per partition and no shuffle
+    *      runs. Untouched files carry into the new version as-is —
+    *      their stats, bytes and bloom entries never move.
+    *   3. **Rewrite**: the new files hold the touched files' survivors
+    *      (rows whose key is not in the source, an anti join) plus
+    *      every non-deleted source row. Updates and inserts need no
+    *      routing: a matched key can only live in a touched file, so
+    *      its old row is not a survivor. One staged write carries both.
+    *
+    * The source keys feed only the semi and anti joins, which ignore
+    * duplicates, so they are never deduplicated. The same aggregate
+    * that gates uniqueness counts the keyed source rows; when that
+    * count times the key columns' default sizes is within
+    * `spark.sql.autoBroadcastJoinThreshold`, both joins broadcast the
+    * keys and no phase shuffles the table side (`-1` keeps the
+    * shuffled joins). A small merge into a table without deletion
+    * vectors, without `clusterBy`, is then 8 Spark jobs: the source
+    * materialization, 3 for the gate aggregate, 2 for the touch probe
+    * (broadcast + scan) and 2 for the rewrite (broadcast + write).
     *
     * The commit lands as mode `merge`, so [[changes]] emits exact CDC:
     * pre-images of updated/deleted rows as `delete`, updated/inserted
@@ -2888,16 +2913,19 @@ object VersionedTable {
       else if (m.stats.nonEmpty) Seq("*") else Nil
 
     // ONE job serves the uniqueness gate AND phase 1's key-bounds
-    // aggregate: per-key counts reduce to (max multiplicity, per-key
-    // min/max) in a single pass over the materialized source — bounds
+    // aggregate: per-key counts reduce to (max multiplicity, keyed row
+    // count, per-key min/max) in a single pass over the materialized
+    // source (the row count sizes phase 2's broadcast) — bounds
     // over the distinct keys equal bounds over the rows, and the two
     // separate jobs this used to run (dup gate, then bounds) each paid
     // a full job launch at every merge (guide §1.2: remove passes).
     val prunable = keys.filter(k =>
       statTag(schema(schema.fieldIndex(k)).dataType).isDefined)
     val cntCol = "__graft_merge_n"
-    val gAggs = max(col(cntCol)).as(cntCol) +: prunable.flatMap(k =>
-      Seq(min(col(k)).as(s"_min_$k"), max(col(k)).as(s"_max_$k")))
+    val rowsCol = "__graft_merge_rows"
+    val gAggs = Seq(max(col(cntCol)).as(cntCol), sum(col(cntCol)).as(rowsCol)) ++
+      prunable.flatMap(k =>
+        Seq(min(col(k)).as(s"_min_$k"), max(col(k)).as(s"_max_$k")))
     val g = labeled(spark, "graft: merge gate+bounds") {
       src.filter(keyNotNull).groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as(cntCol))
@@ -2946,35 +2974,47 @@ object VersionedTable {
         case None => m.files
       }
 
-    // phase 2: which candidate files CONTAIN a matched key
-    val srcKeys = src.filter(keyNotNull).select(keys.map(col): _*).distinct()
+    // phase 2: which candidate files CONTAIN a matched key. The source
+    // keys only ever feed semi/anti joins, which ignore duplicates on
+    // their right side, so they are not deduplicated; a source whose
+    // keyed rows fit Spark's own broadcast threshold (sized by the
+    // gate's row count) is broadcast, so neither join shuffles
+    val keyedRows =
+      if (g.isNullAt(g.fieldIndex(rowsCol))) 0L
+      else g.getLong(g.fieldIndex(rowsCol))
+    val keyBytes = keys.map(k => schema(k).dataType.defaultSize.toLong).sum
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val srcKeys = {
+      val k = src.filter(keyNotNull).select(keys.map(col): _*)
+      if (threshold >= 0 && keyedRows * keyBytes <= threshold) broadcast(k)
+      else k
+    }
     val touched: Seq[String] =
       if (candidates.isEmpty) Nil
       else {
         val known = entryByTail(m, candidates)
+        // deduped per partition and then on the driver, not by a
+        // shuffle
         labeled(spark, "graft: merge touch probe") {
           readFilesLivePos(spark, root, m, candidates)
             .withColumnRenamed(DvRelCol, "_file")
             .join(srcKeys, keys.toSeq, "left_semi")
-            .select("_file").distinct().collect()
-        }.flatMap(r => known.get(r.getString(0))).toSeq
+            .select("_file").as(Encoders.STRING)
+            .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+            .collect()
+        }.distinct.flatMap(known.get).toSeq
       }
 
-    // phase 3: rewrite touched files; route source rows
+    // phase 3: survivors of the touched files plus every non-deleted
+    // source row — updates and inserts land alike, and matched keys
+    // can ONLY live in touched files (a candidate file containing one
+    // is touched by construction), so no replaced row survives
+    val upserts = src.filter(!col(DelFlag)).drop(DelFlag)
     val out: DataFrame =
-      if (touched.isEmpty) src.filter(!col(DelFlag)).drop(DelFlag)
-      else {
-        val touchedRows = readFilesLive(spark, root, m, touched)
-        val survivors = touchedRows.join(srcKeys, keys.toSeq, "left_anti")
-        // matched keys can ONLY live in touched files (a candidate file
-        // containing one is touched by construction)
-        val tKeys = touchedRows.select(keys.map(col): _*).distinct()
-        val updates = src.join(tKeys, keys.toSeq, "left_semi")
-          .filter(!col(DelFlag)).drop(DelFlag)
-        val inserts = src.join(tKeys, keys.toSeq, "left_anti")
-          .filter(!col(DelFlag)).drop(DelFlag)
-        survivors.unionByName(updates).unionByName(inserts)
-      }
+      if (touched.isEmpty) upserts
+      else readFilesLive(spark, root, m, touched)
+        .join(srcKeys, keys.toSeq, "left_anti")
+        .unionByName(upserts)
     if (touched.isEmpty && labeled(spark, "graft: merge no-op probe") {
       out.isEmpty
     }) return None // pure-tombstone no-op

@@ -222,4 +222,31 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(parsed === Some((Map("q_a" -> 1.5, "q_b" -> 0.5), 0.31)))
     assert(BenchGuard.parseBenchLine("garbage\nno json\n").isEmpty)
   }
+
+  test("the compact stdout line carries every query's time and still fits") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    assert(names.size >= 250)
+    // worst-case widths: two-digit seconds and two decimals everywhere
+    val times = names.zipWithIndex.map { case (n, i) =>
+      n -> (if (i == 7) -1.0 else 10.0 + (i * 0.137) % 89.0 + 0.004) }
+    val sweep = Bench.Sweep(times, Map(names(7) -> "boom"), calibration = 0.42)
+    val line = Bench.stdoutLine(sweep, "/tmp/sf",
+      Some("bench/last_run.json"))
+    assert(line.length < 2000, s"len ${line.length}")
+    val j = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    Seq("metric", "value", "unit", "n", "n_errors", "calibration", "sf",
+      "queries_path").foreach(k => assert(j.has(k), s"lost key $k"))
+    assert(j.get("n").asInt === names.size)
+    assert(j.get("n_errors").asInt === 1)
+    val q = j.get("queries_s")
+    val secs = (0 until q.get("s").size).map(q.get("s").get(_).asDouble)
+    assert(secs.size === names.size)
+    secs.zip(times).foreach { case (got, (n, want)) =>
+      assert(math.abs(got - want) <= 0.005 + 1e-9, s"$n: $got vs $want")
+    }
+    val order = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(names.mkString(",").getBytes("UTF-8"))
+      .take(6).map(b => f"${b & 0xff}%02x").mkString
+    assert(q.get("order").asText === order)
+  }
 }

@@ -224,6 +224,26 @@ class NswRecallSpec extends SparkSpec {
         "direct trajectory")
   }
 
+  test("a stored-index search leaves the block manager as it found it") {
+    val model = IvfIndex.train(corpus, "vec_id", "embedding", k = 16,
+      iters = 0)
+    val (nodes, edges) = SimilaritySearch.hnswIndex(
+      corpus, "vec_id", "embedding", model)
+    val dir = java.nio.file.Files.createTempDirectory("graft_nsw_blocks")
+      .toString + "/idx"
+    SimilaritySearch.nswSave(nodes, edges, model, dir)
+    val (n2, e2, m2) = SimilaritySearch.nswLoad(spark, dir)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val nsw = SimilaritySearch.nswSearchIndex(queries, n2, e2, "vec_id",
+      "embedding", m2, k = 10, nprobe = 3).collect()
+    val hnsw = SimilaritySearch.hnswSearchIndex(queries, n2, e2, "vec_id",
+      "embedding", m2, k = 10, nprobe = 3).collect()
+    assert(nsw.nonEmpty && hnsw.nonEmpty)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"searches left ${left.size} anchored RDDs behind")
+  }
+
   test("output contract: ranks are dense per query, sims exact") {
     val model = IvfIndex.train(corpus, "vec_id", "embedding", k = 16,
       iters = 0)

@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.sources.VersionedTable
@@ -852,6 +855,174 @@ class VersionedTableSpec extends SparkSpec {
         Seq((1L, "zz")).toDF("id", "s"), Seq("id"), pinVersion = pinned)
     }
     assert(ids(root) === Seq(9L))
+  }
+
+  /** Runs `body` under its own job group and returns the description of
+    * every Spark job it started. A one-task fence job in a second group
+    * marks "every earlier job start was delivered" to the listener.
+    */
+  private def jobsOf[T](group: String)(body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        seen.add((p.map(_.getProperty("spark.jobGroup.id")).orNull,
+          p.map(_.getProperty("spark.job.description")).orNull))
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seen.asScala.exists(_._1 == s"$group-fence") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      (out, seen.asScala.filter(_._1 == group).map(_._2).toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private val day0 = java.time.LocalDate.of(2024, 3, 1)
+
+  /** `days` single-day commits of `n` employees, zone maps on both keys. */
+  private def multiDayTable(days: Int, n: Int): String = {
+    val root = freshRoot()
+    (0 until days).foreach { d =>
+      VersionedTable.commit((1L to n.toLong).map(i =>
+          (i, java.sql.Date.valueOf(day0.plusDays(d.toLong)), 1000L * d + i))
+        .toDF("employee_number", "snapshot_date", "salary"), root,
+        statsColumns = Seq("employee_number", "snapshot_date"))
+    }
+    root
+  }
+
+  test("a 40-row correction merges in at most 8 Spark jobs") {
+    val root = multiDayTable(days = 5, n = 400)
+    // built from an RDD, so Spark has no size estimate for it and only
+    // the merge's own broadcast rule keeps its joins from shuffling
+    val fix = spark.sparkContext.parallelize((1L to 40L).map(i =>
+        (i * 7L, java.sql.Date.valueOf(day0.plusDays(2L)), -i)), 4)
+      .toDF("employee_number", "snapshot_date", "salary")
+    val (v, jobs) = jobsOf("merge-job-gate") {
+      VersionedTable.merge(spark, root, fix,
+        Seq("employee_number", "snapshot_date"),
+        statsColumns = Seq("employee_number", "snapshot_date"))
+    }
+    val byPhase = jobs.groupBy(identity).map { case (d, js) => s"$d: ${js.size}" }
+      .toSeq.sorted.mkString("; ")
+    info(s"${jobs.size} jobs — $byPhase")
+    assert(v === Some(5L))
+    assert(jobs.nonEmpty && jobs.size <= 8,
+      s"a small merge ran ${jobs.size} Spark jobs ($byPhase)")
+    val fixed = VersionedTable.read(spark, root)
+      .filter(col("salary") < 0).select("employee_number").collect()
+      .map(_.getLong(0)).sorted.toSeq
+    assert(fixed === (1L to 40L).map(_ * 7L))
+    assert(VersionedTable.read(spark, root).count() === 2000L)
+  }
+
+  test("merge equals a plain upsert model, shuffled or broadcast") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    Seq(None, Some("-1")).foreach { threshold =>
+      val prev = spark.conf.getOption(key)
+      threshold.foreach(spark.conf.set(key, _))
+      try {
+        val root = freshRoot()
+        val base = Seq((Some(1L), "a", 10L), (Some(2L), "b", 20L),
+          (Some(3L), "c", 30L), (None: Option[Long], "n0", 0L))
+        VersionedTable.commit(base.take(2).toDF("id", "s", "n"), root,
+          statsColumns = Seq("*"))
+        VersionedTable.commit(base.drop(2).toDF("id", "s", "n"), root,
+          statsColumns = Seq("*"))
+        // update id=2, insert id=4, matched tombstone id=3, unmatched
+        // tombstone id=9, a null-key row (never matches: inserts)
+        val src = Seq((Some(2L), "B", 200L, "U"), (Some(4L), "d", 40L, "U"),
+          (Some(3L), "c", 30L, "D"), (Some(9L), "z", 90L, "D"),
+          (None: Option[Long], "nil", 5L, "U"))
+        val v = VersionedTable.merge(spark, root,
+          src.toDF("id", "s", "n", "op"), Seq("id"),
+          deleteMatched = Some(col("op") === "D"))
+        assert(v === Some(2L), s"threshold $threshold")
+        // the model: a keyed upsert; a null key never matches
+        val keyed = base.collect { case (Some(i), s, n) => i -> (s, n) }.toMap
+        val model = src.foldLeft(keyed) {
+          case (t, (Some(i), _, _, "D")) => t - i
+          case (t, (Some(i), s, n, _)) => t + (i -> (s, n))
+          case (t, _) => t
+        }
+        type R = (Option[Long], String, Long)
+        def rowsOf(rs: Array[org.apache.spark.sql.Row]): Seq[R] = rs.map(r =>
+          (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1),
+            r.getLong(2))).toSeq.sortBy(_.toString)
+        val expected: Seq[R] = (model.toSeq.map { case (i, (s, n)) =>
+          (Some(i): Option[Long], s, n) } ++
+          Seq[R]((None, "n0", 0L), (None, "nil", 5L))).sortBy(_.toString)
+        assert(rowsOf(VersionedTable.read(spark, root)
+          .select("id", "s", "n").collect()) === expected,
+          s"threshold $threshold")
+        // CDC: the replaced and deleted rows' pre-images, and every
+        // non-deleted source row
+        val ch = VersionedTable.changes(spark, root, 1L, 2L)
+        def side(t: String) = rowsOf(ch.filter(col("_change_type") === t)
+          .select("id", "s", "n").collect())
+        assert(side("delete") === Seq[R]((Some(2L), "b", 20L),
+          (Some(3L), "c", 30L)).sortBy(_.toString), s"threshold $threshold")
+        assert(side("insert") === Seq[R]((Some(2L), "B", 200L),
+          (Some(4L), "d", 40L), (None, "nil", 5L)).sortBy(_.toString),
+          s"threshold $threshold")
+      } finally prev match {
+        case Some(p) => spark.conf.set(key, p)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
+  test("a duplicate-key merge source fails before any file is staged") {
+    val root = multiDayTable(days = 2, n = 20)
+    val dataDirs = () => new java.io.File(root, "data").listFiles()
+      .map(_.getName).toSet
+    val before = dataDirs()
+    val d = java.sql.Date.valueOf(day0)
+    intercept[IllegalArgumentException] {
+      VersionedTable.merge(spark, root,
+        Seq((3L, d, 1L), (3L, d, 2L), (4L, d, 3L))
+          .toDF("employee_number", "snapshot_date", "salary"),
+        Seq("employee_number", "snapshot_date"))
+    }
+    assert(dataDirs() === before, "a rejected merge staged files")
+    assert(VersionedTable.latestVersion(spark, root) === Some(1L))
+  }
+
+  test("concurrent timestamp commits all keep their timestamp zone maps") {
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val confBefore = spark.conf.getOption(tsKey)
+    val df = Seq((1L, "2024-01-15 10:00:00"), (2L, "2024-02-15 10:00:00"))
+      .toDF("id", "ts").select(col("id"), col("ts").cast("timestamp"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val roots = try {
+      val fs = (0 until 2).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Seq[String]] {
+          def call(): Seq[String] = (0 until 10).map { _ =>
+            val root = freshRoot()
+            VersionedTable.commit(df, root, statsColumns = Seq("*"))
+            root
+          }
+        }))
+      fs.flatMap(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdownNow()
+    roots.foreach { root =>
+      val m = VersionedTable.manifest(spark, root, 0L)
+      assert(m.stats.nonEmpty, s"$root lost its zone maps")
+      m.stats.foreach { case (file, st) =>
+        val ts = st.cols.get("ts")
+        assert(ts.exists(c => c.min.isDefined && c.max.isDefined),
+          s"$root/$file lost its timestamp zone map: $ts")
+      }
+    }
+    assert(spark.conf.getOption(tsKey) === confBefore,
+      "the scoped timestamp override leaked into the session")
   }
 
   test("replaceWhere swaps the matched region atomically and rejects leaks") {
