@@ -1,5 +1,9 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: executes every SparkEntry query against
@@ -23,18 +27,109 @@ import org.apache.spark.sql.SparkSession
   *     probe;
   *   - a crashing query is reported as -1 with its error in a separate
   *     "errors" map, never as a fake elapsed time;
+  *   - a listener records the Spark work of the pass whose time is
+  *     kept ([[Layers]]): it goes to stderr and to the artifact's
+  *     "layers" map, never to the stdout line;
   *   - the FULL result (identical numbers to the stdout line, plus
   *     run provenance) is also written to `bench/last_run.json` when
   *     the repo's bench/ directory is present — one measurement, every
   *     consumer: the driver parses stdout, [[BenchGuard]] reads or
   *     writes the same artifact, and review diffs the committed file.
+  *
+  * Usage: `sbt 'runMain graft.Bench'`; `SPARK_GRAFT_BENCH_ONLY=q_a,q_b`
+  * sweeps a subset, which is also how one query is profiled.
   */
 object Bench {
 
   final case class Sweep(
       results: Seq[(String, Double)],
       errors: collection.Map[String, String],
-      calibration: Double)
+      calibration: Double,
+      layers: collection.Map[String, Layers] = Map.empty)
+
+  /** The Spark work of one timed pass of one query: its jobs, the
+    * stages and tasks they ran, the wall time covered by at least one
+    * running job, the rest of the wall time (driver-side planning,
+    * listing and commits), and the stages' summed input, shuffle write,
+    * spill (memory plus disk) and GC. Input counts cached and
+    * checkpointed blocks read back as well as scanned files.
+    */
+  final case class Layers(
+      jobs: Int, stages: Int, tasks: Int, jobS: Double, driverGapS: Double,
+      inputMb: Double, shuffleWriteMb: Double, spillMb: Double, gcS: Double) {
+    def json: String =
+      f"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"job_s":$jobS%.3f,"driver_gap_s":$driverGapS%.3f,""" +
+        f""""input_mb":$inputMb%.3f,"shuffle_write_mb":$shuffleWriteMb%.3f,"spill_mb":$spillMb%.3f,"gc_s":$gcS%.3f}"""
+  }
+
+  /** The listener behind [[Layers]]. [[mark]] runs a one-task fence
+    * job and waits until the listener has seen it start, so every
+    * event posted before it has been delivered. The jobs that start
+    * between a begin mark and an end mark are the query's, with every
+    * stage they ran; the end mark also waits (bounded) for those jobs
+    * to end.
+    */
+  private final class Recorder extends SparkListener {
+    private val FenceKey = "graft.bench.fence"
+    private var fences = 0L
+    private var awaited = ""
+    private var seen = false
+    private var recording = false
+    private val jobs = mutable.LinkedHashMap.empty[Int, (Long, Long)] // start, end ms
+    private val jobStages = mutable.Set.empty[Int]
+    private val done = mutable.ArrayBuffer.empty[StageInfo]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      Option(e.properties).flatMap(p => Option(p.getProperty(FenceKey))) match {
+        case Some(token) if token == awaited =>
+          seen = true
+          recording = token.startsWith("begin")
+          if (recording) { jobs.clear(); jobStages.clear(); done.clear() }
+        case Some(_) =>
+        case None if recording =>
+          jobs(e.jobId) = (e.time, -1L)
+          jobStages ++= e.stageIds
+        case None =>
+      }
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobs.get(e.jobId).foreach { case (t0, _) => jobs(e.jobId) = (t0, e.time) }
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      if (jobStages.contains(e.stageInfo.stageId)) done += e.stageInfo
+    }
+
+    def mark(sc: SparkContext, begin: Boolean): Unit = {
+      val token = synchronized {
+        fences += 1
+        awaited = s"${if (begin) "begin" else "end"}-$fences"
+        seen = false
+        awaited
+      }
+      sc.setLocalProperty(FenceKey, token)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(FenceKey, null)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      def settled = synchronized(seen && (begin || jobs.values.forall(_._2 >= 0)))
+      while (!settled && System.nanoTime() < deadline) Thread.sleep(2)
+    }
+
+    /** The recorded pass, given its timed wall seconds. */
+    def layers(wallS: Double): Layers = synchronized {
+      // wall time covered by at least one job: the union of the intervals
+      val (busyMs, _) = jobs.values.filter(_._2 >= 0).toSeq.sortBy(_._1)
+        .foldLeft((0L, Long.MinValue)) { case ((sum, reach), (t0, t1)) =>
+          (sum + (t1 - math.max(t0, reach)).max(0L), math.max(reach, t1))
+        }
+      val metrics = done.flatMap(s => Option(s.taskMetrics))
+      def mb(f: org.apache.spark.executor.TaskMetrics => Long) = metrics.map(f).sum / 1048576.0
+      Layers(jobs.size, done.size, done.map(_.numTasks).sum, busyMs / 1e3,
+        (wallS - busyMs / 1e3).max(0.0), mb(_.inputMetrics.bytesRead),
+        mb(_.shuffleWriteMetrics.bytesWritten), mb(m => m.memoryBytesSpilled + m.diskBytesSpilled),
+        metrics.map(_.jvmGCTime).sum / 1e3)
+    }
+  }
 
   /** Pass count per query, from SPARK_GRAFT_BENCH_RUNS (default 3 —
     * floors and last_run.json are baselined min-of-3). Parsed, never
@@ -45,10 +140,11 @@ object Bench {
     scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
       .getOrElse(3).max(1)
 
-  /** Timed full materialization of every column. After the write, every
-    * persistent RDD (the localCheckpoint blocks many operators create at
-    * construction) is dropped: nothing reads them once the query has
-    * materialized, and letting 130+ queries' blocks accumulate in the
+  /** Timed full materialization of every column, with the Spark work
+    * `rec` saw between the fences around it. After the write, every
+    * persistent RDD the query created (the localCheckpoint blocks many
+    * operators create at construction) is dropped: nothing reads them
+    * once the query has materialized, and letting 130+ queries' blocks accumulate in the
     * block manager makes LATE queries measure the EARLY queries' memory
     * pressure — the graph suite (alphabetically late, GC-sensitive
     * iterative jobs) measured 1.5-2x slower in a full sweep than
@@ -56,10 +152,13 @@ object Bench {
     */
   private def materialize(
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-      spark: SparkSession, sfDir: String): Double = {
+      spark: SparkSession, sfDir: String, rec: Recorder): (Double, Layers) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    rec.mark(spark.sparkContext, begin = true)
     val t0 = System.nanoTime()
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     val s = (System.nanoTime() - t0) / 1e9
+    rec.mark(spark.sparkContext, begin = false)
     // BLOCKING unpersist (r18): the async drop let a heavy
     // checkpointing query's blocks linger into its alphabetic
     // NEIGHBORS' measurements — the r18-build sweep showed the q_s*
@@ -67,9 +166,12 @@ object Bench {
     // 25-95% while the rest of the suite held its floors. The drop
     // runs AFTER the timer stops, so measured values are untouched;
     // each query now just starts from a clean block manager.
-    spark.sparkContext.getPersistentRDDs.values
+    // Only what the query persisted: in a shared context (a test JVM)
+    // the caches other code holds stay, and a cached relation whose
+    // blocks vanished plans with its uncached size estimate.
+    spark.sparkContext.getPersistentRDDs.collect { case (id, rdd) if !before(id) => rdd }
       .foreach(_.unpersist(blocking = true))
-    s
+    (s, rec.layers(s))
   }
 
   /** The core count every run is labelled and sized by, resolved once:
@@ -121,8 +223,10 @@ object Bench {
   }
 
   /** min-over-interleaved-passes measurement of every (filtered)
-    * SparkEntry query, with calibration probed around every pass.
-    * `SPARK_GRAFT_BENCH_GAP_MS` optionally sleeps between queries.
+    * SparkEntry query, with calibration probed around every pass and
+    * the [[Layers]] of each query's kept pass. The only code that times
+    * a registry query. `SPARK_GRAFT_BENCH_GAP_MS` optionally sleeps
+    * between queries.
     */
   private[graft] def sweep(
       spark: SparkSession,
@@ -137,16 +241,19 @@ object Bench {
     // cache, janino) otherwise lands entirely on the first query
     calibrationQuery(spark, sfDir)
     var calibration = timedCalibration(spark, sfDir)
-    val best = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    (1 to runs).foreach { pass =>
+    val best = mutable.LinkedHashMap.empty[String, Double]
+    val layers = mutable.LinkedHashMap.empty[String, Layers]
+    val errors = mutable.LinkedHashMap.empty[String, String]
+    val rec = new Recorder
+    spark.sparkContext.addSparkListener(rec)
+    try (1 to runs).foreach { pass =>
       selected.foreach { case (name, fn) =>
         if (gapMs > 0 && (pass > 1 || best.nonEmpty)) Thread.sleep(gapMs)
         try {
-          val s = materialize(fn, spark, sfDir)
-          best(name) = math.min(best.getOrElse(name, Double.MaxValue), s)
+          val (s, l) = materialize(fn, spark, sfDir, rec)
+          if (s < best.getOrElse(name, Double.MaxValue)) { best(name) = s; layers(name) = l }
           errors.remove(name) // a later pass succeeding clears the error
-          System.err.println(f"[bench] pass $pass $name%-24s $s%8.2f s")
+          System.err.println(f"[bench] pass $pass $name%-24s $s%8.2f s  ${l.json}")
         } catch {
           case e: Throwable =>
             if (!best.contains(name) && !errors.contains(name))
@@ -157,11 +264,11 @@ object Bench {
       }
       // a probe after EVERY pass: load arriving mid-sweep registers
       calibration = math.max(calibration, timedCalibration(spark, sfDir))
-    }
+    } finally spark.sparkContext.removeSparkListener(rec)
     val results = selected.map { case (name, _) =>
       name -> best.getOrElse(name, -1.0)
     }
-    Sweep(results, errors, calibration)
+    Sweep(results, errors, calibration, layers)
   }
 
   private def esc(s: String): String =
@@ -199,7 +306,9 @@ object Bench {
       // parsed, not raw: a malformed env value spliced verbatim would
       // produce invalid JSON and break every last_run consumer
       "runs" -> runsFromEnv.toString,
-      "written_at" -> ("\"" + java.time.Instant.now().toString + "\"")))
+      "written_at" -> ("\"" + java.time.Instant.now().toString + "\""),
+      "layers" -> s.results.flatMap { case (q, _) => s.layers.get(q).map(l => "\"" + q + "\":" + l.json) }
+        .mkString("{", ",", "}")))
     def put(name: String): String = {
       val path = dir.resolve(name)
       java.nio.file.Files.write(path,
@@ -259,7 +368,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = runsFromEnv
     // dev filter: SPARK_GRAFT_BENCH_ONLY=q_a,q_b runs a subset (the
-    // driver never sets it, so driver runs always cover everything)
+    // driver never sets it, so driver runs always cover everything) —
+    // also the per-query profile: each pass's Layers go to stderr
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val spark = buildSession()

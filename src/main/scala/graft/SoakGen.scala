@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic 10× (or `factor`×) scale-up of a testdata directory,
-  * for the sf1 perf soak ([[Soak]]): every fact table becomes `factor`
+  * for the scale sets of [[BenchFamilies]]: every fact table becomes `factor`
   * key-shifted replicas whose foreign keys stay consistent (one global
   * id offset per replica, applied to every int64 id column), while the
   * fixed dimensions (region, nation) copy through unchanged — the
@@ -118,14 +118,5 @@ object SoakGen {
       out.write.mode("overwrite").parquet(s"$dstDir/$t.parquet")
       System.err.println(s"[soakgen] $t x$factor written")
     }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val dst = args.lift(1).getOrElse("/tmp/graft_sf1")
-    val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = Bench.buildSession()
-    generate(spark, src, dst, factor)
-    spark.stop()
   }
 }

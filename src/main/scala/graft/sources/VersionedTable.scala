@@ -679,11 +679,8 @@ object VersionedTable {
     // trap, guide §2.5). Applies ONLY to the user-facing commit — the
     // maintenance paths (compact/zorder/merge rewrite) arrange their
     // own layout deliberately and stage it untouched.
-    // spark.graft.write.distribute=false restores the raw layout.
     val stagedDf =
-      if (effParts.nonEmpty && spark.conf
-          .get("spark.graft.write.distribute", "true").toBoolean)
-        df.hint("rebalance", effParts: _*)
+      if (effParts.nonEmpty) df.hint("rebalance", effParts: _*)
       else df
     val (stageRel, staged) = stage(stagedDf, root, effParts, effColMap,
       effConstraints)
@@ -1690,10 +1687,7 @@ object VersionedTable {
     // which every consumer treats as "keep" ([[mayMatch]]) — bounds
     // stay sound, row counts stay exact. Decimals keep the scan (their
     // footer encoding is not lowered into the manifest domain).
-    val footerable = spark.conf
-      .get("spark.graft.stats.viaFooters", "true").toBoolean &&
-      cols.forall(f => statTag(f.dataType).get != "decimal")
-    if (footerable) {
+    if (cols.forall(f => statTag(f.dataType).get != "decimal")) {
       val wanted = cols.flatMap(f => statTag(f.dataType).map(f.name -> _)).toMap
       collectStatsFooters(spark, root, staged, wanted) match {
         case Some(r) => return r
@@ -1804,11 +1798,16 @@ object VersionedTable {
     readFootersPerFile(spark, root, staged, wanted)
   }
 
+  /** Staged-file count up to which [[readFootersPerFile]] reads the
+    * footers on the driver instead of in a Spark job.
+    */
+  private val FooterDriverMaxFiles = 64
+
   /** Per-row-group [[FileStats]] read off each staged file's FOOTER —
     * no data pages opened. Small commits read on the driver through a
     * bounded pool (no Spark job at all — the commit-path common case);
-    * commits past `spark.graft.stats.footerDriverMaxFiles` fan out one
-    * footer per task, the million-file shape.
+    * commits past [[FooterDriverMaxFiles]] fan out one footer per task,
+    * the million-file shape.
     */
   private def readFootersPerFile(
       spark: SparkSession, root: String, staged: Seq[String],
@@ -1833,9 +1832,7 @@ object VersionedTable {
         }
       } finally reader.close()
     }
-    val driverMax = spark.conf
-      .get("spark.graft.stats.footerDriverMaxFiles", "64").toInt
-    if (staged.size <= driverMax) {
+    if (staged.size <= FooterDriverMaxFiles) {
       val conf = spark.sparkContext.hadoopConfiguration
       if (staged.size <= 4) staged.map(one(_, conf)).toMap
       else {

@@ -66,8 +66,8 @@ object DecontaminationStream {
     store(stateDir).merged(spark).getOrElse(Seq.empty[Long].toDF("h"))
   }
 
-  /** Collapse the accumulated batch directories into one resolved
-    * batch holding the distinct shingle-hash union — lossless (the
+  /** Fold every batch directory but the newest into one resolved
+    * batch holding their distinct shingle-hash union — lossless (the
     * store is a set; distinct-union with future batches is unchanged).
     * Atomic swap; single-writer ([[MergeStore.compact]]).
     */

@@ -26,10 +26,12 @@ import graft.operators.IvfIndex
   * Scale shape: each micro-batch pays one map-only assignment over its
   * own rows plus a cell-partitioned write. While multiple batch
   * directories exist, reads resolve latest-per-id first (one exchange
-  * over the accumulated state); [[compact]] collapses the store to a
-  * single resolved batch, after which reads skip the resolution and
-  * the probed cells prune at the cell=N directory level, the same
-  * pruning [[IvfIndex.save]] buys for the batch index.
+  * over the accumulated state); [[compact]] folds every batch but the
+  * newest into one resolved batch, so the resolution scans two
+  * directories however many batches streamed. A single-batch store
+  * skips the resolution, and its probed cells prune at the cell=N
+  * directory level, the same pruning [[IvfIndex.save]] buys for the
+  * batch index.
   */
 object IvfStream {
 
@@ -88,8 +90,8 @@ object IvfStream {
     * Cost note: the latest-wins resolution aggregates the whole
     * accumulated state before the search's cell join, which blocks
     * cell-level partition pruning while more than one batch directory
-    * exists. [[compact]] collapses the store to a single batch so
-    * steady-state reads skip the aggregation entirely.
+    * exists. [[compact]] bounds it to two directories: the fold and the
+    * newest batch.
     */
   def index(spark: SparkSession, stateDir: String): DataFrame = {
     import spark.implicits._
@@ -97,14 +99,12 @@ object IvfStream {
       .getOrElse(Seq.empty[(Long, Seq[Double], Int)].toDF("id", "nv", "cell"))
   }
 
-  /** Collapse the accumulated batch directories into ONE resolved
-    * batch (keyed max(batch_id), so later streamed batches keep
-    * winning), staged through a temp directory and an atomic swap —
-    * a crash mid-compact or a concurrent reader never sees a
-    * half-written store. After compaction, [[index]] takes its
-    * single-batch fast path: no aggregation, and the probed cells
-    * prune at the directory level again. Single-writer
-    * ([[MergeStore.compact]]).
+  /** Fold every batch directory but the newest into ONE resolved
+    * batch (keyed by the second-newest id, so the newest and later
+    * streamed batches keep winning), staged through a temp directory
+    * and an atomic swap — a crash mid-compact or a concurrent reader
+    * never sees a half-written store, and a replay of the newest batch
+    * rewrites only itself. Single-writer ([[MergeStore.compact]]).
     */
   def compact(spark: SparkSession, stateDir: String): Unit =
     store(stateDir).compact(spark)

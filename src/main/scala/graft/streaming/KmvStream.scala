@@ -84,7 +84,7 @@ object KmvStream {
       .getOrElse(Seq.empty[(String, Seq[Long])].toDF("source", "sketch"))
   }
 
-  /** Collapse the accumulated batch directories into one resolved
+  /** Fold every batch directory but the newest into one resolved
     * batch holding the merged per-source sketches — lossless for every
     * future merge (a KMV sketch is a semilattice: merging with the
     * already-merged state equals merging with the original batches).

@@ -124,22 +124,22 @@ private[graft] final case class MergeStore(
   def latest(spark: SparkSession, before: Long = Long.MaxValue): Option[DataFrame] =
     batchIds(spark).filter(_ < before).lastOption.map(batch(spark, _))
 
-  /** Compaction as the algebra dictates. A [[Semilattice]] folds every
-    * batch into one directory keyed by the newest id: re-merging state
-    * with itself changes nothing. Every other mergeable algebra folds
+  /** Compaction as the algebra dictates. Every mergeable algebra folds
     * every batch EXCEPT the newest into one directory keyed by the
     * second-newest id: the newest is the one delivery Structured
     * Streaming repeats after a crash before its checkpoint commit, and
     * that replay must overwrite only itself — a sum would count it
-    * twice beside a folded copy, and a first-seen or latest-wins batch,
+    * twice beside a folded copy, a first-seen or latest-wins batch,
     * which is computed against every other batch, would find itself in
-    * the fold. An [[OutputLog]] never compacts. No-op on an empty store.
+    * the fold, and a semilattice fold keyed by the newest id would be
+    * overwritten by the replay, losing every earlier batch. An
+    * [[OutputLog]] never compacts. No-op on a store of at most one
+    * batch.
     */
   def compact(spark: SparkSession): Unit = {
     val ids = batchIds(spark)
     val keep = algebra match {
       case OutputLog => None
-      case _: Semilattice => ids.lastOption
       case _ => ids.dropRight(1).lastOption
     }
     keep.foreach { keepId =>

@@ -87,8 +87,8 @@ object ReservoirStream {
     MergeStore.foreachBatch(stream, checkpointDir)(
       mergeBatch(_, sourceCol, idCol, weightCol, stateDir, cfg, _)).start()
 
-  /** Collapse the accumulated batch directories into one resolved
-    * batch holding the CURRENT reservoir (the k best per source).
+  /** Fold every batch directory but the newest into one resolved
+    * batch holding their reservoir (the k best per source).
     * Sound for future merges — top-k(top-k(A) ∪ B) = top-k(A ∪ B) —
     * with one documented narrowing: max-weight re-score resolution
     * afterwards only sees weights at or after the compaction (an

@@ -77,8 +77,9 @@ class DecontaminationStreamSpec extends SparkSpec {
     DecontaminationStream.compact(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .count(_.getPath.getName.startsWith("batch_id=")) == 1)
+    // batch 0 is the fold; the newest batch keeps its own directory
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath.getName)
+      .filter(_.startsWith("batch_id=")).sorted.toSeq == Seq("batch_id=0", "batch_id=1"))
     assert(DecontaminationStream.hashes(spark, dir)
       .as[Long].collect().toSet == before)
     DecontaminationStream.mergeBatch(benchSlice(2), "doc_id", "text", dir, cfg, 2L)

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Gate over the committed sf1 scale-soak artifact
-  * (`bench/soak_sf1.json`, written by [[Soak]]): every soak query's
+  * (`bench/soak_sf1.json`, written by [[BenchFamilies]]): every soak query's
   * measured 10×-data time ratio must stay near-linear. A query that
   * takes much more than `factor`× the time on `factor`× the data has
   * a superlinear term the sf0.1 bench cannot see — the exact class of
@@ -30,23 +30,20 @@ class SoakGuardSpec extends AnyFunSuite {
     "q_graph_pagerank" -> 20.0,
     "q_graph_kcore" -> 20.0)
 
-  private case class Entry(sf01: Double, sfx: Double, ratio: Double)
+  import SoakGuardSpec._
 
-  private lazy val artifact: Map[String, Entry] = {
+  private def read(path: java.nio.file.Path, set: String): String = {
     assert(java.nio.file.Files.isRegularFile(path),
-      s"$path missing — run `sbt 'runMain graft.Soak'` and commit the artifact")
-    val text = new String(java.nio.file.Files.readAllBytes(path),
+      s"$path missing — run `sbt 'runMain graft.BenchFamilies $set'` and commit the artifact")
+    new String(java.nio.file.Files.readAllBytes(path),
       java.nio.charset.StandardCharsets.UTF_8)
-    val entry =
-      """"(q_[a-z0-9_]+)":\{"sf01_sec":([0-9.eE+-]+),"sfx_sec":([0-9.eE+-]+),"ratio":([0-9.eE+-]+)\}""".r
-    entry.findAllMatchIn(text).map(m =>
-      m.group(1) -> Entry(m.group(2).toDouble, m.group(3).toDouble,
-        m.group(4).toDouble)).toMap
   }
 
+  private lazy val artifact: Map[String, Entry] = entries(read(path, "soak"))
+
   test("the soak artifact covers exactly the registered soak set") {
-    assert(artifact.keySet === Soak.SoakQueries.toSet,
-      "soak_sf1.json out of date — rerun graft.Soak after editing SoakQueries")
+    assert(artifact.keySet === BenchFamilies.Sets("soak").queries.toSet,
+      "soak_sf1.json out of date — rerun `runMain graft.BenchFamilies soak` after editing SoakQueries")
   }
 
   test("every soak query ran at both scales") {
@@ -79,24 +76,15 @@ class SoakGuardSpec extends AnyFunSuite {
   private val path2 = java.nio.file.Paths.get("bench", "soak_sf2.json")
 
   private lazy val artifact2: (Double, Map[String, Entry]) = {
-    assert(java.nio.file.Files.isRegularFile(path2),
-      s"$path2 missing — run `sbt 'runMain graft.Soak'` and commit the artifact")
-    val text = new String(java.nio.file.Files.readAllBytes(path2),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val factor = """"factor":(\d+)""".r.findFirstMatchIn(text)
-      .map(_.group(1).toDouble).getOrElse(0.0)
-    val entry =
-      """"(q_[a-z0-9_]+)":\{"sf01_sec":([0-9.eE+-]+),"sfx_sec":([0-9.eE+-]+),"ratio":([0-9.eE+-]+)\}""".r
-    (factor, entry.findAllMatchIn(text).map(m =>
-      m.group(1) -> Entry(m.group(2).toDouble, m.group(3).toDouble,
-        m.group(4).toDouble)).toMap)
+    val text = read(path2, "soak_sf2")
+    (factorOf(text), entries(text))
   }
 
   test("the sf2 artifact covers the graph pair at a ≥20× factor") {
     val (factor, entries) = artifact2
     assert(factor >= 20.0, s"sf2 soak factor $factor < 20")
-    assert(entries.keySet === Soak.Sf2Queries.toSet,
-      "soak_sf2.json out of date — rerun graft.Soak after editing Sf2Queries")
+    assert(entries.keySet === BenchFamilies.Sets("soak_sf2").queries.toSet,
+      "soak_sf2.json out of date — rerun `runMain graft.BenchFamilies soak_sf2` after editing its set")
     entries.foreach { case (q, e) =>
       assert(e.sf01 > 0 && e.sfx > 0, s"$q: non-positive time in sf2 artifact")
     }
@@ -113,4 +101,38 @@ class SoakGuardSpec extends AnyFunSuite {
     }
     assert(over.isEmpty, s"superlinear at 20×:\n${over.mkString("\n")}")
   }
+
+  test("the one renderer writes every set in the shape this gate parses") {
+    BenchFamilies.Sets.foreach { case (name, set) =>
+      def sweep(scale: Double) = Bench.Sweep(
+        set.queries.zipWithIndex.map { case (q, i) => q -> scale * (i + 1) } :+ ("q_not_in_set" -> 1.0),
+        Map.empty, calibration = 0.5)
+      val text = BenchFamilies.render(set, 3, sweep(0.25), sweep(1.0))
+      withClue(s"[$name] ") {
+        assert(factorOf(text) === set.factor.toDouble)
+        val got = entries(text)
+        assert(got.keySet === set.queries.toSet)
+        got.values.foreach(e => assert(e.ratio === 4.0))
+        // the same bytes a JSON reader sees
+        val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
+        val key = if (set.families.isEmpty) "queries" else "families"
+        assert(root.has(key) && root.path("factor").asInt() === set.factor)
+      }
+    }
+  }
+}
+
+object SoakGuardSpec {
+  final case class Entry(sf01: Double, sfx: Double, ratio: Double)
+
+  private val EntryRe =
+    """"(q_[a-z0-9_]+)":\{"sf01_sec":([0-9.eE+-]+),"sfx_sec":([0-9.eE+-]+),"ratio":([0-9.eE+-]+)\}""".r
+
+  def entries(text: String): Map[String, Entry] =
+    EntryRe.findAllMatchIn(text).map(m =>
+      m.group(1) -> Entry(m.group(2).toDouble, m.group(3).toDouble,
+        m.group(4).toDouble)).toMap
+
+  def factorOf(text: String): Double =
+    """"factor":(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toDouble).getOrElse(0.0)
 }

@@ -17,7 +17,8 @@ sbt -batch Test/compile 'testOnly graft.BenchGuardSpec graft.SoakGuardSpec'
 # Both guard specs are Spark-free and fast; they catch the OTHER
 # ship-red-at-HEAD modes — a registered query whose floor / last_run
 # measurement was never committed (run `BenchGuard --update` to fix),
-# and a stale or superlinear sf1 soak artifact (run `graft.Soak`).
+# and a stale or superlinear sf1 soak artifact (run
+# `graft.BenchFamilies soak soak_sf2`).
 
 if [[ "${1:-}" == "--full" ]]; then
   tools/cli_smoke.sh
