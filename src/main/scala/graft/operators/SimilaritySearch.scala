@@ -1003,13 +1003,6 @@ object SimilaritySearch {
     * mid-loop fails the call — rerun it (deterministic); see the
     * restart-contract note on [[graft.operators.Graph]].
     */
-  /** Free a `localCheckpoint`ed frame's storage blocks NOW — alias
-    * kept for the established call sites; the shared implementation
-    * (used by every iterative operator) lives in [[Blocks.drop]].
-    */
-  private[graft] def dropCheckpointBlocks(df: DataFrame): Unit =
-    Blocks.drop(df)
-
   def kCenterSelect(
       corpus: DataFrame,
       idCol: String,
@@ -1052,15 +1045,15 @@ object SimilaritySearch {
               .select(col("id"), col("nv"),
                 least(col("d"), minusSeed(nv)).as("d"))
               .localCheckpoint() // eager: safe to drop prev's blocks below
-            dropCheckpointBlocks(prev)
+            Blocks.drop(prev)
           }
         case None => exhausted = true // corpus smaller than k
       }
     }
     // the result below is built from driver-side `centers` only —
     // nothing reads the corpus or running state after the loop
-    dropCheckpointBlocks(state)
-    dropCheckpointBlocks(n)
+    Blocks.drop(state)
+    Blocks.drop(n)
     centers.toSeq
       .toDF("center_rank", "vec_id", "min_dist")
       .withColumn("min_dist", round(col("min_dist"), 6))

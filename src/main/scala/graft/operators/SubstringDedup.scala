@@ -173,7 +173,7 @@ object SubstringDedup {
           s"scrubToFixedPoint: still removing spans after $maxPasses passes")
       val next = scrub(last, idCol, "clean_text", n).localCheckpoint()
       removed = next.agg(sum("n_removed")).collect().head.getLong(0)
-      if (last ne first) SimilaritySearch.dropCheckpointBlocks(last)
+      if (last ne first) Blocks.drop(last)
       last = next
       passes += 1
     }

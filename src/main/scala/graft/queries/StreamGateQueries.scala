@@ -165,7 +165,7 @@ object StreamGateQueries {
     slices.tail.foreach { b =>
       val next = ScdIncremental.mergeBatch(hist, b, Seq("o_custkey"))
         .localCheckpoint()
-      graft.operators.SimilaritySearch.dropCheckpointBlocks(hist)
+      graft.operators.Blocks.drop(hist)
       hist = next
     }
     hist.select("o_custkey", "snapshot_date", "change_status",

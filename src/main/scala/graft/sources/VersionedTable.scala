@@ -239,6 +239,20 @@ object VersionedTable {
     if (vs.isEmpty) None else Some(vs.max)
   }
 
+  /** `m`'s recorded schema; fails on a legacy manifest without one. */
+  private def schemaOf(root: String, m: Manifest): StructType =
+    m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(throw new java.io.IOException(
+        s"snapshot of $root has no recorded schema"))
+
+  /** `version` when given, else the latest; fails on a table with no
+    * commit.
+    */
+  private def pin(spark: SparkSession, root: String,
+      version: Option[Long] = None): Long =
+    version.orElse(latestVersion(spark, root)).getOrElse(
+      throw new java.io.IOException(s"no committed version under $root"))
+
   // committed version JSONs are immutable (the rename arbiter means a
   // version file is written exactly once), so the PARSE is cacheable:
   // every table op re-reads the latest manifest several times per call
@@ -684,22 +698,8 @@ object VersionedTable {
       else df
     val (stageRel, staged) = stage(stagedDf, root, effParts, effColMap,
       effConstraints)
-    val physStatsCols =
-      if (statsColumns == Seq("*")) statsColumns
-      else statsColumns.map(physCols)
-    val stagedStats0 = withPartitionStats(
-      collectStats(spark, root, staged, physSchema(df.schema, effColMap),
-        physStatsCols, effParts),
-      staged, effParts, df.schema)
-    val stagedStats =
-      if (!rowGroupStats) stagedStats0
-      else {
-        val rgs = collectRowGroupStats(spark, root, staged,
-          physSchema(df.schema, effColMap), physStatsCols, effParts)
-        stagedStats0.map { case (rel, fsSt) =>
-          rel -> fsSt.copy(rgs = rgs.getOrElse(rel, Nil))
-        }
-      }
+    val stagedStats = statsOfStaged(spark, root, staged, df.schema,
+      effColMap, effParts, statsColumns, rowGroupStats)
     val stagedBlooms = collectBlooms(spark, root, stageRel, staged,
       physSchema(df.schema, effColMap), bloomColumns.map(physCols),
       bloomExpectedItems, bloomFpp, effParts)
@@ -943,12 +943,9 @@ object VersionedTable {
     */
   def renameColumn(spark: SparkSession, root: String,
       from: String, to: String): Long = {
-    val v = latestVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root)
     val m = manifest(spark, root, v)
-    val schema = m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(throw new java.io.IOException(
-        s"snapshot of $root has no recorded schema"))
+    val schema = schemaOf(root, m)
     require(schema.fieldNames.contains(from),
       s"rename: no column `$from` in ${schema.simpleString}")
     require(!schema.fieldNames.contains(to),
@@ -1000,12 +997,9 @@ object VersionedTable {
     */
   def widenColumn(spark: SparkSession, root: String, name: String,
       to: DataType): Long = {
-    val v = latestVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root)
     val m = manifest(spark, root, v)
-    val schema = m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(throw new java.io.IOException(
-        s"snapshot of $root has no recorded schema"))
+    val schema = schemaOf(root, m)
     val field = schema.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"widen: no column `$name` in ${schema.simpleString}"))
@@ -1044,8 +1038,7 @@ object VersionedTable {
   def addConstraint(spark: SparkSession, root: String, name: String,
       predicate: String): Long = {
     require(TagName.matches(name), s"constraint: invalid name `$name`")
-    val v = latestVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root)
     val m = manifest(spark, root, v)
     require(!m.constraints.contains(name),
       s"constraint `$name` already exists (drop it first to replace)")
@@ -1084,8 +1077,7 @@ object VersionedTable {
     */
   def dropConstraint(spark: SparkSession, root: String,
       name: String): Long = {
-    val v = latestVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root)
     val m = manifest(spark, root, v)
     require(m.constraints.contains(name),
       s"no constraint `$name` on $root (have: " +
@@ -1173,12 +1165,9 @@ object VersionedTable {
     * Racing schema changes conflict. Returns the committed version.
     */
   def dropColumn(spark: SparkSession, root: String, name: String): Long = {
-    val v = latestVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root)
     val m = manifest(spark, root, v)
-    val schema = m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(throw new java.io.IOException(
-        s"snapshot of $root has no recorded schema"))
+    val schema = schemaOf(root, m)
     require(schema.fieldNames.contains(name),
       s"drop: no column `$name` in ${schema.simpleString}")
     require(schema.fields.length > 1, "drop: cannot drop the only column")
@@ -1275,6 +1264,27 @@ object VersionedTable {
       val base = stats.getOrElse(rel, FileStats(-1L, Map.empty))
       rel -> base.copy(cols = base.cols ++ pcols)
     }.toMap
+  }
+
+  /** Zone maps of freshly staged files (`schema` logical, `statsColumns`
+    * logical or `"*"`), with per-row-group maps when `rowGroups` — the
+    * one stats pass of every data-adding publish.
+    */
+  private def statsOfStaged(spark: SparkSession, root: String,
+      staged: Seq[String], schema: StructType, colMap: Map[String, String],
+      partitionBy: Seq[String], statsColumns: Seq[String],
+      rowGroups: Boolean): Map[String, FileStats] = {
+    val phys = physSchema(schema, colMap)
+    val cols = mapStatsCols(statsColumns, colMap)
+    val stats = withPartitionStats(
+      collectStats(spark, root, staged, phys, cols, partitionBy),
+      staged, partitionBy, schema)
+    if (!rowGroups) stats
+    else {
+      val rgs = collectRowGroupStats(spark, root, staged, phys, cols,
+        partitionBy)
+      stats.map { case (rel, s) => rel -> s.copy(rgs = rgs.getOrElse(rel, Nil)) }
+    }
   }
 
   /** The shared publish loop: build the next manifest against the
@@ -2197,6 +2207,15 @@ object VersionedTable {
     }
   }
 
+  /** [[filesMatching]] for an unresolved `predicate`: every file when
+    * the predicate cannot be judged against `m`'s schema.
+    */
+  private def filesMayMatch(spark: SparkSession, root: String, m: Manifest,
+      predicate: Column): Seq[String] =
+    m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+      .flatMap(resolvedPredicate(spark, _, predicate))
+      .fold(m.files)(filesMatching(spark, root, m, _))
+
   /** Metadata-only COUNT(*): the snapshot's row count summed off the
     * manifest's per-file stats — zero data files opened (the Delta
     * trick that answers `SELECT count(*)` from the log). None when any
@@ -2205,8 +2224,7 @@ object VersionedTable {
     */
   def rowCount(spark: SparkSession, root: String,
       version: Option[Long] = None): Option[Long] = {
-    val v = version.orElse(latestVersion(spark, root)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root, version)
     val m = manifest(spark, root, v)
     // rows < 0 marks a partition-stats-only entry (partition values
     // recorded for pruning, row count never collected) — unknown, not 0
@@ -2222,18 +2240,9 @@ object VersionedTable {
     */
   def pruneFiles(spark: SparkSession, root: String, predicate: Column,
       version: Option[Long] = None): (Seq[String], Seq[String]) = {
-    val v = version.orElse(latestVersion(spark, root)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root, version)
     val m = manifest(spark, root, v)
-    val resolved = m.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-      .flatMap(resolvedPredicate(spark, _, predicate))
-    resolved match {
-      case None => (m.files, Nil) // can't judge: keep everything
-      case Some(e) =>
-        val kept = filesMatching(spark, root, m, e).toSet
-        m.files.partition(kept)
-    }
+    m.files.partition(filesMayMatch(spark, root, m, predicate).toSet)
   }
 
   /** The snapshot at `version` (default: latest) as a DataFrame whose
@@ -2243,8 +2252,7 @@ object VersionedTable {
     */
   def read(spark: SparkSession, root: String, version: Option[Long] = None)
       : DataFrame = {
-    val v = version.orElse(latestVersion(spark, root)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root, version)
     readManifest(spark, root, manifest(spark, root, v), None)
   }
 
@@ -2259,32 +2267,109 @@ object VersionedTable {
     */
   def readWhere(spark: SparkSession, root: String, predicate: Column,
       version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(latestVersion(spark, root)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root, version)
     readManifest(spark, root, manifest(spark, root, v), Some(predicate))
       .filter(predicate)
   }
 
   private def readManifest(spark: SparkSession, root: String, m: Manifest,
       predicate: Option[Column]): DataFrame = {
-    val schema = m.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-    val resolved = for {
-      p <- predicate
-      s <- schema
-      e <- resolvedPredicate(spark, s, p)
-    } yield e
-    val files = resolved match {
-      case Some(e) => filesMatching(spark, root, m, e)
-      case None => m.files
-    }
+    val files = predicate.fold(m.files)(filesMayMatch(spark, root, m, _))
     if (files.isEmpty) {
-      val s = schema.getOrElse(throw new java.io.IOException(
-        s"empty snapshot of $root has no recorded schema"))
+      val s = m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(throw new java.io.IOException(
+          s"empty snapshot of $root has no recorded schema"))
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], s)
     }
     readFilesLive(spark, root, m, files)
+  }
+
+  // ---- the rewrite path --------------------------------------------------
+
+  /** The one publish of every file-rewriting mutation — [[compact]] and
+    * its partial forms, [[delete]], [[merge]], [[replaceWhere]]: stage
+    * `rows` (None when the operation only drops files), collect their
+    * zone maps (`statsColumns`, else `"*"` when the table carries
+    * stats, so a rewrite never downgrades pruning or the metadata-only
+    * count) plus per-row-group maps when the table carries them or
+    * `rowGroupStats` asks, and publish pinned manifest `m` minus
+    * `removed` plus the staged files as `mode`.
+    *
+    * Concurrency is optimistic (the Delta rebase): commits since the pin
+    * that only add files rebase cleanly; the publish conflicts as
+    * [[requireRebase]] states, with `check` as the operation's own rule.
+    */
+  private def rewrite(spark: SparkSession, root: String, m: Manifest,
+      mode: String, read: Iterable[String], removed: Set[String],
+      rows: Option[DataFrame], statsColumns: Seq[String],
+      external: Boolean = false, rowGroupStats: Boolean = false,
+      txn: Option[(String, Long)] = None,
+      check: Option[Manifest] => Unit = _ => ()): Option[Long] = {
+    val keepStats =
+      if (statsColumns.nonEmpty) statsColumns
+      else if (m.stats.nonEmpty) Seq("*") else Nil
+    val rowGroups =
+      rowGroupStats || m.stats.valuesIterator.exists(_.rgs.nonEmpty)
+    val staged = rows.map { df =>
+      val (rel, files) = stage(df, root, m.partitionBy, m.colMap,
+        if (external) m.constraints else Map.empty)
+      (rel, files, statsOfStaged(spark, root, files, df.schema, m.colMap,
+        m.partitionBy, keepStats, rowGroups))
+    }
+    val files = staged.map(_._2).getOrElse(Nil)
+    val stats = staged.map(_._3).getOrElse(Map.empty[String, FileStats])
+    val schemaJson = m.schemaJson.orElse(rows.map(_.schema.json)).getOrElse(
+      throw new java.io.IOException(s"snapshot of $root has no recorded schema"))
+    publish(spark, root, files, stats, mode = mode,
+      schemaJsonOf = () => schemaJson, txn = txn) { prevM =>
+      requireRebase(spark, root, mode, m, prevM, read, external,
+        staged.map(_._1))(check(prevM))
+      (prevM.map(_.files).getOrElse(Nil).filterNot(removed) ++ files,
+        (prevM.map(_.stats).getOrElse(Map.empty) -- removed) ++ stats)
+    }
+  }
+
+  /** The conflict rule of [[rewrite]] and [[deleteVectored]]: throws
+    * [[CompactionConflictException]], after deleting the staged dir,
+    * when a commit since pinned manifest `m`
+    *   - removed or re-vectored a file in `read` (the view the staged
+    *     rows were computed from is gone: rebasing would resurrect a
+    *     racing delete's rows or drop a racing rewrite's),
+    *   - changed the CHECK constraints while the staged rows come from
+    *     outside the table (`external`: they were checked against
+    *     `m`'s constraints only), or
+    *   - fails the operation's own `check`.
+    */
+  private def requireRebase(spark: SparkSession, root: String, op: String,
+      m: Manifest, prevM: Option[Manifest], read: Iterable[String],
+      external: Boolean, stageRel: Option[String])(check: => Unit): Unit =
+    try {
+      if (external &&
+          prevM.map(_.constraints).getOrElse(m.constraints) != m.constraints)
+        throw new CompactionConflictException(s"$op on $root@v${m.version} " +
+          "raced a constraint change; rerun against the new snapshot")
+      val prevFiles = prevM.map(_.files).getOrElse(Nil).toSet
+      if (!read.forall(prevFiles) || dvsChanged(m, prevM, read))
+        throw new CompactionConflictException(s"$op on $root@v${m.version} " +
+          "raced a commit that removed or re-vectored files it read; " +
+          "rerun against the new snapshot")
+      check
+    } catch {
+      case e: CompactionConflictException =>
+        stageRel.foreach(rel =>
+          fs(spark, new Path(root)).delete(new Path(new Path(root), rel), true))
+        throw e
+    }
+
+  /** True when a racing commit changed the deletion vectors of any
+    * file in `rels` between the pinned manifest and `prev`.
+    */
+  private def dvsChanged(pinned: Manifest, prev: Option[Manifest],
+      rels: Iterable[String]): Boolean = {
+    val prevDvs = prev.map(_.dvs).getOrElse(Map.empty)
+    rels.exists(r =>
+      prevDvs.get(r).map(_.refs) != pinned.dvs.get(r).map(_.refs))
   }
 
   // ---- compaction ------------------------------------------------------
@@ -2293,23 +2378,22 @@ object VersionedTable {
     * ones — the small-file OPTIMIZE a streaming-append table needs
     * (every micro-batch commit adds files; reads degrade O(files)).
     * Data-identical by construction: the new version holds exactly the
-    * rows of the version read.
+    * rows of the version read. The whole-snapshot case of
+    * [[compactFiles]]:
     *
     *   - `clusterBy` non-empty: range-repartition + sort on those
     *     columns (one shuffle) so the rewritten files carry DISJOINT
     *     zone-map ranges — compaction doubles as the clustering pass
     *     that makes [[readWhere]] pruning sharp.
-    *   - `clusterBy` empty: `coalesce` bin-packing, NO shuffle — pure
+    *   - `zOrderBy` non-empty: the same along a z-curve of its columns.
+    *   - both empty: `coalesce` bin-packing, NO shuffle — pure
     *     file-count reduction at file-read cost.
     *
-    * Concurrency: optimistic, Delta-style. A racing APPEND rebases
-    * cleanly (the compacted replacement plus the appended files — no
-    * lost update, verified per retry). A racing OVERWRITE or
-    * overlapping compaction removed files this pass read → the staged
-    * output is stale → [[CompactionConflictException]] and the staged
-    * files are deleted; rerun. Returns the committed version, or None
-    * when the table is empty or already a single file with nothing to
-    * gain.
+    * Concurrency is [[rewrite]]'s: a racing APPEND rebases cleanly; a
+    * racing OVERWRITE or overlapping compaction removed files this pass
+    * read → [[CompactionConflictException]], staged files deleted;
+    * rerun. Returns the committed version, or None when the table is
+    * empty or already a single file with nothing to gain.
     */
   def compact(spark: SparkSession, root: String,
       targetPartitions: Int = 1, clusterBy: Seq[String] = Nil,
@@ -2325,59 +2409,31 @@ object VersionedTable {
     val m = manifest(spark, root, v)
     // outstanding deletion vectors always compact (the purge that
     // re-earns plain scans and lets vacuum destroy the dead bytes)
-    if (m.files.size <= targetPartitions && clusterBy.isEmpty &&
-      zOrderBy.isEmpty && m.dvs.isEmpty) return None
-    val source = m.files.toSet
-    val snapshot = readManifest(spark, root, m, None)
+    if (m.files.isEmpty || m.files.size <= targetPartitions &&
+      clusterBy.isEmpty && zOrderBy.isEmpty && m.dvs.isEmpty) return None
+    compactPinned(spark, root, m, m.files, targetPartitions, clusterBy,
+      statsColumns, zOrderBy, zOrderBits, rowGroupStats)
+  }
+
+  /** Rewrite `rels` of pinned manifest `m` — their LIVE rows, deletion
+    * vectors applied — into `targetPartitions` files as mode `compact`:
+    * z-ordered on `zOrderBy`, range-clustered on `clusterBy`, else
+    * bin-packed by `coalesce`. The one compaction of every OPTIMIZE form.
+    */
+  private def compactPinned(spark: SparkSession, root: String, m: Manifest,
+      rels: Seq[String], targetPartitions: Int, clusterBy: Seq[String],
+      statsColumns: Seq[String], zOrderBy: Seq[String] = Nil,
+      zOrderBits: Int = 8, rowGroupStats: Boolean = false): Option[Long] = {
+    val live = readFilesLive(spark, root, m, rels)
     val arranged =
       if (zOrderBy.nonEmpty) graft.operators.ZOrder.cluster(
-        snapshot, zOrderBy, zOrderBits, targetPartitions)
-      else if (clusterBy.isEmpty) snapshot.coalesce(targetPartitions)
-      else snapshot
+        live, zOrderBy, zOrderBits, targetPartitions)
+      else if (clusterBy.isEmpty) live.coalesce(targetPartitions)
+      else live
         .repartitionByRange(targetPartitions, clusterBy.map(col): _*)
         .sortWithinPartitions(clusterBy.map(col): _*)
-    val (stageRel, staged) = stage(arranged, root, m.partitionBy, m.colMap)
-    // a statted table KEEPS its stats through OPTIMIZE (same fallback
-    // as delete/merge/compactFiles) — compacting must never silently
-    // disable pruning and the metadata COUNT(*)
-    val keepStats =
-      if (statsColumns.nonEmpty) statsColumns
-      else if (m.stats.nonEmpty) Seq("*") else Nil
-    val stagedStats1 = withPartitionStats(
-      collectStats(spark, root, staged, physSchema(snapshot.schema, m.colMap),
-        mapStatsCols(keepStats, m.colMap), m.partitionBy),
-      staged, m.partitionBy, snapshot.schema)
-    // a row-group-mapped table KEEPS its maps through OPTIMIZE — the
-    // compaction that produces the large files is exactly where the
-    // per-group envelopes start paying
-    val keepRg = rowGroupStats ||
-      m.stats.valuesIterator.exists(_.rgs.nonEmpty)
-    val stagedStats =
-      if (!keepRg || keepStats.isEmpty) stagedStats1
-      else {
-        val rgs = collectRowGroupStats(spark, root, staged,
-          physSchema(snapshot.schema, m.colMap),
-          mapStatsCols(keepStats, m.colMap), m.partitionBy)
-        stagedStats1.map { case (rel, fsSt) =>
-          rel -> fsSt.copy(rgs = rgs.getOrElse(rel, Nil))
-        }
-      }
-    val f = fs(spark, new Path(root))
-    publish(spark, root, staged, stagedStats, mode = "compact",
-      schemaJsonOf = () => m.schemaJson.getOrElse(snapshot.schema.json),
-      txn = None) { prevM =>
-      val prevFiles = prevM.map(_.files).getOrElse(Nil)
-      if (!source.subsetOf(prevFiles.toSet) ||
-          dvsChanged(m, prevM, source)) {
-        f.delete(new Path(new Path(root), stageRel), true)
-        throw new CompactionConflictException(
-          s"compaction of $root@v$v raced a commit that removed or " +
-            "re-vectored files it read; rerun")
-      }
-      val prevStats = prevM.map(_.stats).getOrElse(Map.empty)
-      (prevFiles.filterNot(source) ++ staged,
-        (prevStats -- source) ++ stagedStats)
-    }
+    rewrite(spark, root, m, "compact", rels, rels.toSet, Some(arranged),
+      statsColumns, rowGroupStats = rowGroupStats)
   }
 
   // ---- ANALYZE (metadata-only stats backfill) ----------------------------
@@ -2399,17 +2455,14 @@ object VersionedTable {
   def analyzeStats(spark: SparkSession, root: String,
       statsColumns: Seq[String] = Seq("*")): Option[Long] = {
     require(statsColumns.nonEmpty, "analyzeStats needs stats columns")
-    val v = latestVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root)
     val m = manifest(spark, root, v)
     // rows < 0 = a partition-stats-only placeholder: partition values
     // are recorded but the data stats were never collected — backfill
     val missing = m.files.filterNot(rel =>
       m.stats.get(rel).exists(_.rows >= 0L))
     if (missing.isEmpty) return None
-    val schema = m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(throw new java.io.IOException(
-        s"snapshot of $root has no recorded schema"))
+    val schema = schemaOf(root, m)
     val fresh = withPartitionStats(
       collectStats(spark, root, missing, physSchema(schema, m.colMap),
         mapStatsCols(statsColumns, m.colMap), m.partitionBy),
@@ -2435,12 +2488,9 @@ object VersionedTable {
     * on `clusterBy`; every other file carries into the new version
     * as-is, stats and bytes unmoved. Commits as mode `compact`
     * (data-identical by contract, so the change feed skips it).
-    * Concurrency mirrors [[compact]]: racing appends rebase; a racing
+    * Concurrency is [[rewrite]]'s: racing appends rebase; a racing
     * commit that removed or re-vectored a selected file conflicts.
-    *
-    * `statsColumns` defaults like [[delete]]: `"*"` when the table
-    * already carries stats, so a maintenance pass never silently
-    * downgrades the metadata-only count path.
+    * `statsColumns` defaults as there.
     */
   def compactFiles(spark: SparkSession, root: String, rels: Seq[String],
       targetPartitions: Int = 1, clusterBy: Seq[String] = Nil,
@@ -2448,52 +2498,15 @@ object VersionedTable {
       pinVersion: Option[Long] = None): Option[Long] = {
     require(targetPartitions >= 1, "targetPartitions must be >= 1")
     if (rels.isEmpty) return None
-    val v = pinVersion.orElse(latestVersion(spark, root)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root, pinVersion)
     val m = manifest(spark, root, v)
-    val unknown = rels.filterNot(m.files.contains)
+    val unknown = rels.filterNot(m.files.toSet)
     require(unknown.isEmpty,
       s"compactFiles: not in snapshot v$v: ${unknown.mkString(", ")}")
-    val keepStats =
-      if (statsColumns.nonEmpty) statsColumns
-      else if (m.stats.nonEmpty) Seq("*") else Nil
-    val live = readFilesLive(spark, root, m, rels)
-    val arranged =
-      if (clusterBy.isEmpty) live.coalesce(targetPartitions)
-      else live
-        .repartitionByRange(targetPartitions, clusterBy.map(col): _*)
-        .sortWithinPartitions(clusterBy.map(col): _*)
-    val (stageRel, staged) = stage(arranged, root, m.partitionBy, m.colMap)
-    val stagedStats = withPartitionStats(
-      collectStats(spark, root, staged, physSchema(live.schema, m.colMap),
-        mapStatsCols(keepStats, m.colMap), m.partitionBy),
-      staged, m.partitionBy, live.schema)
-    val source = rels.toSet
-    val f = fs(spark, new Path(root))
-    publish(spark, root, staged, stagedStats, mode = "compact",
-      schemaJsonOf = () => m.schemaJson.getOrElse(live.schema.json),
-      txn = None) { prevM =>
-      val prevFiles = prevM.map(_.files).getOrElse(Nil)
-      if (!source.subsetOf(prevFiles.toSet) ||
-          dvsChanged(m, prevM, source)) {
-        f.delete(new Path(new Path(root), stageRel), true)
-        throw new CompactionConflictException(
-          s"compactFiles on $root@v$v raced a commit that removed or " +
-            "re-vectored files it read; rerun")
-      }
-      val prevStats = prevM.map(_.stats).getOrElse(Map.empty)
-      (prevFiles.filterNot(source) ++ staged,
-        (prevStats -- source) ++ stagedStats)
-    }
+    compactPinned(spark, root, m, rels, targetPartitions, clusterBy,
+      statsColumns)
   }
 
-  /** The small-file maintenance pass: bin-pack every data file at or
-    * under `maxFileBytes` (judged from filesystem sizes — one driver
-    * listing bounded by the file count) into files of roughly
-    * `targetFileBytes`, leaving healthy files alone. No-op (None)
-    * unless at least two small files exist. The scheduled-job shape of
-    * the Delta OPTIMIZE-small-files role.
-    */
   /** Predicate-scoped OPTIMIZE — `OPTIMIZE WHERE date = X`, the
     * maintenance shape a date-partitioned 100 TB table actually runs
     * (yesterday's thousand streaming micro-batch files bin-pack into
@@ -2509,17 +2522,18 @@ object VersionedTable {
       targetPartitions: Int = 1, clusterBy: Seq[String] = Nil,
       statsColumns: Seq[String] = Nil): Option[Long] = {
     val v = latestVersion(spark, root).getOrElse(return None)
-    val m = manifest(spark, root, v)
-    if (m.files.isEmpty) return None
-    val schema = m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-    val rels = schema.flatMap(resolvedPredicate(spark, _, predicate)) match {
-      case Some(e) => filesMatching(spark, root, m, e)
-      case None => m.files // can't judge: whole-table OPTIMIZE
-    }
-    compactFiles(spark, root, rels, targetPartitions, clusterBy,
+    compactFiles(spark, root, filesMayMatch(spark, root,
+      manifest(spark, root, v), predicate), targetPartitions, clusterBy,
       statsColumns, pinVersion = Some(v))
   }
 
+  /** The small-file maintenance pass: bin-pack every data file at or
+    * under `maxFileBytes` (judged from filesystem sizes — one driver
+    * listing bounded by the file count) into files of roughly
+    * `targetFileBytes`, leaving healthy files alone. No-op (None)
+    * unless at least two small files exist. The scheduled-job shape of
+    * the Delta OPTIMIZE-small-files role.
+    */
   def compactSmall(spark: SparkSession, root: String,
       maxFileBytes: Long = 32L << 20,
       targetFileBytes: Long = 128L << 20,
@@ -2527,8 +2541,7 @@ object VersionedTable {
       statsColumns: Seq[String] = Nil): Option[Long] = {
     require(maxFileBytes > 0 && targetFileBytes >= maxFileBytes,
       "need 0 < maxFileBytes <= targetFileBytes")
-    val v = latestVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root)
     val m = manifest(spark, root, v)
     val rootP = new Path(root)
     val f = fs(spark, rootP)
@@ -2551,8 +2564,7 @@ object VersionedTable {
     */
   def purgeVectors(spark: SparkSession, root: String,
       statsColumns: Seq[String] = Nil): Option[Long] = {
-    val v = latestVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root)
     val m = manifest(spark, root, v)
     if (m.dvs.isEmpty) return None
     val dirty = m.files.filter(m.dvs.contains)
@@ -2592,93 +2604,49 @@ object VersionedTable {
     * `statsColumns`: zone-map columns for the rewritten files; when
     * empty it defaults to `Seq("*")` IF the table already carries
     * stats, so a delete never silently downgrades the metadata-only
-    * count path. Concurrency mirrors [[compact]]: a racing append
-    * rebases cleanly; a racing overwrite/compaction that removed files
-    * this delete read throws [[CompactionConflictException]] (staged
-    * survivors are cleaned up) — rerun against the new snapshot.
+    * count path. Concurrency is [[rewrite]]'s: a racing append rebases
+    * cleanly; a racing overwrite/compaction that removed or re-vectored
+    * files this delete removes throws [[CompactionConflictException]]
+    * (staged survivors are cleaned up) — rerun against the new snapshot.
     *
     * Returns the committed version, or None when no row matches.
     */
   def delete(spark: SparkSession, root: String, predicate: Column,
       statsColumns: Seq[String] = Nil,
       pinVersion: Option[Long] = None): Option[Long] = {
-    val v = pinVersion.orElse(latestVersion(spark, root)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
-    val m = manifest(spark, root, v)
-    if (m.files.isEmpty) return None
-    val schema = m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-    val resolved = schema.flatMap(resolvedPredicate(spark, _, predicate))
-    val candidates = resolved match {
-      case Some(e) => filesMatching(spark, root, m, e)
-      case None => m.files
-    }
-    if (candidates.isEmpty) return None
-    val keepStats =
-      if (statsColumns.nonEmpty) statsColumns
-      else if (m.stats.nonEmpty) Seq("*")
-      else Nil
+    val m = manifest(spark, root, pin(spark, root, pinVersion))
     // DELETE keeps FALSE and NULL rows; only TRUE rows go
     val hit = coalesce(predicate, lit(false))
+    val (whole, partial) = classify(spark, root, m,
+      filesMayMatch(spark, root, m, predicate), hit)
+    if (whole.isEmpty && partial.isEmpty) return None
+    val removed = (whole ++ partial).toSet
+    rewrite(spark, root, m, "delete", removed, removed,
+      if (partial.isEmpty) None
+      else Some(readFilesLive(spark, root, m, partial).filter(!hit)),
+      statsColumns)
+  }
+
+  /** `candidates` split by how many of their live rows `hit` matches:
+    * (every row — the file drops whole, no rewrite; some rows — the
+    * file rewrites to its survivors). Files with no match are in
+    * neither. One aggregate, one driver row per candidate file.
+    */
+  private def classify(spark: SparkSession, root: String, m: Manifest,
+      candidates: Seq[String], hit: Column): (Seq[String], Seq[String]) = {
+    if (candidates.isEmpty) return (Nil, Nil)
+    // DvRelCol is the manifest rel for root-relative entries; a
+    // clone's absolute references resolve through their tails
+    val known = entryByTail(m, candidates)
     // provenance via the per-relation metadata column, never
     // input_file_name() (which rejects the multi-source DV-join plan)
     val counts = readFilesLivePos(spark, root, m, candidates)
       .groupBy(col(DvRelCol).as("_file"))
       .agg(count(when(hit, 1)).as("_matches"), count(lit(1)).as("_total"))
-      .collect()
-    // DvRelCol is the manifest rel for root-relative entries; a
-    // clone's absolute references resolve through their tails
-    val known = entryByTail(m, candidates)
-    var fullDrop = Vector.empty[String]
-    var rewrite = Vector.empty[String]
-    counts.foreach { r =>
-      known.get(r.getAs[String]("_file")).foreach { rel =>
-        val matches = r.getAs[Long]("_matches")
-        if (matches == r.getAs[Long]("_total")) fullDrop :+= rel
-        else if (matches > 0L) rewrite :+= rel
-      }
-    }
-    if (fullDrop.isEmpty && rewrite.isEmpty) return None
-    val (stageRel, staged, stagedStats) =
-      if (rewrite.isEmpty) (None, Nil, Map.empty[String, FileStats])
-      else {
-        val survivors = readFilesLive(spark, root, m, rewrite).filter(!hit)
-        val (rel, s) = stage(survivors, root, m.partitionBy, m.colMap)
-        (Some(rel), s, withPartitionStats(
-          collectStats(spark, root, s, physSchema(survivors.schema, m.colMap),
-            mapStatsCols(keepStats, m.colMap), m.partitionBy),
-          s, m.partitionBy, survivors.schema))
-      }
-    val removedSet = (fullDrop ++ rewrite).toSet
-    val f = fs(spark, new Path(root))
-    publish(spark, root, staged, stagedStats, mode = "delete",
-      schemaJsonOf = () => m.schemaJson.getOrElse(
-        schema.getOrElse(throw new java.io.IOException(
-          s"snapshot of $root has no recorded schema")).json),
-      txn = None) { prevM =>
-      val prevFiles = prevM.map(_.files).getOrElse(Nil)
-      if (!removedSet.subsetOf(prevFiles.toSet) ||
-          dvsChanged(m, prevM, removedSet)) {
-        stageRel.foreach(rel => f.delete(new Path(new Path(root), rel), true))
-        throw new CompactionConflictException(
-          s"delete on $root@v$v raced a commit that removed or re-vectored " +
-            "files it read; rerun against the new snapshot")
-      }
-      val prevStats = prevM.map(_.stats).getOrElse(Map.empty)
-      (prevFiles.filterNot(removedSet) ++ staged,
-        (prevStats -- removedSet) ++ stagedStats)
-    }
-  }
-
-  /** True when a racing commit changed the deletion vectors of any
-    * file in `rels` between the pinned manifest and `prev` — a rewrite
-    * computed from the pinned live view would resurrect the racing
-    * delete's rows, so every file-rewriting op conflicts on this.
-    */
-  private def dvsChanged(pinned: Manifest, prev: Option[Manifest],
-      rels: Iterable[String]): Boolean = {
-    val prevDvs = prev.map(_.dvs).getOrElse(Map.empty)
-    rels.exists(r =>
-      prevDvs.get(r).map(_.refs) != pinned.dvs.get(r).map(_.refs))
+      .collect().toSeq.flatMap(r => known.get(r.getString(0))
+        .map(rel => (rel, r.getLong(1), r.getLong(2))))
+    (counts.collect { case (rel, n, total) if n == total => rel },
+      counts.collect { case (rel, n, total) if n > 0L && n < total => rel })
   }
 
   /** Row-level DELETE that rewrites NOTHING — the deletion-vector
@@ -2706,9 +2674,10 @@ object VersionedTable {
     *
     * CDC: the commit lands as mode `dvdelete`; [[changes]] emits the
     * newly-dead rows as `delete`, bounded by the touched files.
-    * Concurrency: racing appends rebase; a racing commit that removed
-    * OR re-vectored a file this delete read conflicts loudly (keeps
-    * recorded dead counts exact). `txn` gives exactly-once replay
+    * Concurrency is [[rewrite]]'s rule ([[requireRebase]]) over the
+    * files this delete vectors: racing appends rebase; a racing commit
+    * that removed OR re-vectored one conflicts loudly (keeps recorded
+    * dead counts exact). `txn` gives exactly-once replay
     * protection for streaming takedown feeds. Returns the committed
     * version, or None when nothing matches or the txn already landed.
     */
@@ -2716,16 +2685,8 @@ object VersionedTable {
       pinVersion: Option[Long] = None,
       txn: Option[(String, Long)] = None): Option[Long] = {
     if (alreadyCommitted(spark, root, txn)) return None
-    val v = pinVersion.orElse(latestVersion(spark, root)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
-    val m = manifest(spark, root, v)
-    if (m.files.isEmpty) return None
-    val schema = m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-    val resolved = schema.flatMap(resolvedPredicate(spark, _, predicate))
-    val candidates = resolved match {
-      case Some(e) => filesMatching(spark, root, m, e)
-      case None => m.files
-    }
+    val m = manifest(spark, root, pin(spark, root, pinVersion))
+    val candidates = filesMayMatch(spark, root, m, predicate)
     if (candidates.isEmpty) return None
     val hit = coalesce(predicate, lit(false))
     val hits = readFilesLivePos(spark, root, m, candidates)
@@ -2756,15 +2717,9 @@ object VersionedTable {
           acc + (fl -> DvEntry(prev.refs ++ refs, prev.dead + n))
         }
       }) { prevM =>
-      val prevFiles = prevM.map(_.files).getOrElse(Nil)
-      if (!newDead.keySet.subsetOf(prevFiles.toSet) ||
-          dvsChanged(m, prevM, newDead.keySet)) {
-        f.delete(new Path(new Path(root), stageRel), true)
-        throw new CompactionConflictException(
-          s"deleteVectored on $root@v$v raced a commit that removed or " +
-            "re-vectored files it read; rerun against the new snapshot")
-      }
-      (prevFiles, prevM.map(_.stats).getOrElse(Map.empty))
+      requireRebase(spark, root, "deleteVectored", m, prevM, newDead.keySet,
+        external = false, Some(stageRel))(())
+      (prevM.map(_.files).getOrElse(Nil), prevM.map(_.stats).getOrElse(Map.empty))
     }
   }
 
@@ -2848,9 +2803,10 @@ object VersionedTable {
     * `txn` gives exactly-once replay protection for streaming upserts
     * (the foreachBatch MERGE pattern). `clusterBy` range-clusters the
     * rewrite so a key-clustered table stays sharply pruneable under a
-    * stream of trickle merges. Concurrency: a racing commit that
-    * removed files this merge read throws
-    * [[CompactionConflictException]]; a racing APPEND rebases only
+    * stream of trickle merges. Concurrency is [[rewrite]]'s for rows
+    * from outside the table: a racing commit that removed or
+    * re-vectored a candidate file, or changed the CHECK constraints,
+    * throws [[CompactionConflictException]]; a racing APPEND rebases only
     * when its files' zone maps prove it holds none of the merge keys,
     * else [[ConcurrentAppendException]] (still the retry contract) —
     * unlike [[delete]], a merge must re-check appends or a just-
@@ -2869,12 +2825,9 @@ object VersionedTable {
       clusterBy: Seq[String] = Nil): Option[Long] = {
     require(keys.nonEmpty, "merge requires at least one key column")
     if (alreadyCommitted(spark, root, txn)) return None
-    val v = pinVersion.orElse(latestVersion(spark, root)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root, pinVersion)
     val m = manifest(spark, root, v)
-    val schema = m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(throw new java.io.IOException(
-        s"snapshot of $root has no recorded schema"))
+    val schema = schemaOf(root, m)
     requireMergeSchema(schema, source.schema, root)
     keys.foreach(k => require(schema.fieldNames.contains(k),
       s"merge key `$k` is not a table column"))
@@ -2893,7 +2846,7 @@ object VersionedTable {
         .localCheckpoint()
     }
     try mergePinned(spark, root, src, keys, statsColumns, txn, clusterBy,
-      v, m, schema)
+      m, schema)
     finally graft.operators.Blocks.drop(src)
   }
 
@@ -2903,11 +2856,8 @@ object VersionedTable {
   private def mergePinned(spark: SparkSession, root: String, src: DataFrame,
       keys: Seq[String], statsColumns: Seq[String],
       txn: Option[(String, Long)], clusterBy: Seq[String],
-      v: Long, m: Manifest, schema: StructType): Option[Long] = {
+      m: Manifest, schema: StructType): Option[Long] = {
     val keyNotNull = keys.map(col(_).isNotNull).reduce(_ && _)
-    val keepStats =
-      if (statsColumns.nonEmpty) statsColumns
-      else if (m.stats.nonEmpty) Seq("*") else Nil
 
     // ONE job serves the uniqueness gate AND phase 1's key-bounds
     // aggregate: per-key counts reduce to (max multiplicity, keyed row
@@ -3027,61 +2977,33 @@ object VersionedTable {
       else out
         .repartitionByRange(touched.size + 1, clusterBy.map(col): _*)
         .sortWithinPartitions(clusterBy.map(col): _*)
-    val (stageRel, staged) = stage(arranged, root, m.partitionBy, m.colMap,
-      m.constraints)
-    val stagedStats = withPartitionStats(
-      collectStats(spark, root, staged, physSchema(out.schema, m.colMap),
-        mapStatsCols(keepStats, m.colMap), m.partitionBy),
-      staged, m.partitionBy, out.schema)
-    val removedSet = touched.toSet
-    val f = fs(spark, new Path(root))
-    publish(spark, root, staged, stagedStats, mode = "merge",
-      schemaJsonOf = () => schema.json, txn = txn) { prevM =>
-      val prevFiles = prevM.map(_.files).getOrElse(Nil)
-      if (prevM.map(_.constraints).getOrElse(m.constraints)
-          != m.constraints) {
-        f.delete(new Path(new Path(root), stageRel), true)
-        throw new CompactionConflictException(
-          s"merge into $root@v$v raced a constraint change; rerun " +
-            "against the new snapshot")
-      }
-      if (!removedSet.subsetOf(prevFiles.toSet) ||
-          dvsChanged(m, prevM, candidates)) {
-        f.delete(new Path(new Path(root), stageRel), true)
-        throw new CompactionConflictException(
-          s"merge into $root@v$v raced a commit that removed or " +
-            "re-vectored files it read; rerun against the new snapshot")
-      }
-      val prevStats = prevM.map(_.stats).getOrElse(Map.empty)
-      // racing-append guard: files that landed AFTER the pinned
-      // snapshot never went through the touch probe, so a source key
-      // hiding in one would be inserted AGAIN by this merge —
-      // duplicate keys. Rebase only when every appended file's zone
-      // map is provably disjoint from the source's key bounds; a
-      // stat-less append (or an un-judgeable key type) conflicts
-      // conservatively and the caller reruns against the new snapshot.
-      if (!noKeyedRows) {
-        val pinnedSet = m.files.toSet
-        val appended = prevFiles.filterNot(pinnedSet)
-        val colliding = keyBounds match {
-          case _ if appended.isEmpty => Nil
-          case Some(e) => appended.filter(rel =>
-            mayMatch(toPhysicalExpr(e, m.colMap),
-              prevStats.getOrElse(rel, NoStats)))
-          case None => appended
-        }
-        if (colliding.nonEmpty) {
-          f.delete(new Path(new Path(root), stageRel), true)
-          throw new ConcurrentAppendException(
-            s"merge into $root@v$v raced an append whose files may " +
-              s"contain merge keys (${colliding.take(3).mkString(", ")}" +
+    rewrite(spark, root, m, "merge", candidates, touched.toSet, Some(arranged),
+      statsColumns, external = true, txn = txn, check = prevM =>
+        // racing-append guard: files that landed AFTER the pinned
+        // snapshot never went through the touch probe, so a source key
+        // hiding in one would be inserted AGAIN by this merge —
+        // duplicate keys. Rebase only when every appended file's zone
+        // map is provably disjoint from the source's key bounds; a
+        // stat-less append (or an un-judgeable key type) conflicts
+        // conservatively and the caller reruns against the new snapshot.
+        if (!noKeyedRows) {
+          val pinnedSet = m.files.toSet
+          val appended = prevM.map(_.files).getOrElse(Nil)
+            .filterNot(pinnedSet)
+          val prevStats = prevM.map(_.stats).getOrElse(Map.empty)
+          val colliding = keyBounds match {
+            case _ if appended.isEmpty => Nil
+            case Some(e) => appended.filter(rel =>
+              mayMatch(toPhysicalExpr(e, m.colMap),
+                prevStats.getOrElse(rel, NoStats)))
+            case None => appended
+          }
+          if (colliding.nonEmpty) throw new ConcurrentAppendException(
+            s"merge into $root@v${m.version} raced an append whose files " +
+              s"may contain merge keys (${colliding.take(3).mkString(", ")}" +
               (if (colliding.size > 3) ", …" else "") +
               "); rerun against the new snapshot")
-        }
-      }
-      (prevFiles.filterNot(removedSet) ++ staged,
-        (prevStats -- removedSet) ++ stagedStats)
-    }
+        })
   }
 
   // ---- replaceWhere (atomic predicate-scoped overwrite) ------------------
@@ -3099,7 +3021,10 @@ object VersionedTable {
     * opened, whole-match files drop with no rewrite, partial-hit files
     * rewrite to survivors. The commit lands as mode `replace`, so
     * [[changes]] emits exact `delete` pre-images and `insert` rows
-    * diffed over the touched + staged files only.
+    * diffed over the touched + staged files only. Concurrency is
+    * [[rewrite]]'s for rows from outside the table: a racing commit
+    * that removed or re-vectored a replaced file, or changed the CHECK
+    * constraints `df` was checked against, conflicts.
     *
     * Returns the committed version, or None on a txn replay.
     */
@@ -3108,67 +3033,23 @@ object VersionedTable {
       txn: Option[(String, Long)] = None,
       pinVersion: Option[Long] = None): Option[Long] = {
     if (alreadyCommitted(spark, root, txn)) return None
-    val v = pinVersion.orElse(latestVersion(spark, root)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root, pinVersion)
     val m = manifest(spark, root, v)
-    val schema = m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-      .getOrElse(throw new java.io.IOException(
-        s"snapshot of $root has no recorded schema"))
+    val schema = schemaOf(root, m)
     requireMergeSchema(schema, df.schema, root)
     val repl = df.select(schema.fieldNames.map(col).toSeq: _*)
     val hit = coalesce(predicate, lit(false))
     if (!repl.filter(!hit).isEmpty) throw new IllegalArgumentException(
       s"replaceWhere into $root: replacement rows must satisfy the " +
         "predicate; at least one does not")
-    val keepStats =
-      if (statsColumns.nonEmpty) statsColumns
-      else if (m.stats.nonEmpty) Seq("*") else Nil
-    val resolved = resolvedPredicate(spark, schema, predicate)
-    val candidates = resolved match {
-      case Some(e) => filesMatching(spark, root, m, e)
-      case None => m.files
-    }
-    var fullDrop = Vector.empty[String]
-    var rewrite = Vector.empty[String]
-    if (candidates.nonEmpty) {
-      val counts = readFilesLivePos(spark, root, m, candidates)
-        .groupBy(col(DvRelCol).as("_file"))
-        .agg(count(when(hit, 1)).as("_matches"), count(lit(1)).as("_total"))
-        .collect()
-      val known = entryByTail(m, candidates)
-      counts.foreach { r =>
-        known.get(r.getAs[String]("_file")).foreach { rel =>
-          val matches = r.getAs[Long]("_matches")
-          if (matches == r.getAs[Long]("_total")) fullDrop :+= rel
-          else if (matches > 0L) rewrite :+= rel
-        }
-      }
-    }
-    val out: DataFrame =
-      if (rewrite.isEmpty) repl
-      else readFilesLive(spark, root, m, rewrite).filter(!hit).unionByName(repl)
-    val (stageRel, staged) = stage(out, root, m.partitionBy, m.colMap,
-      m.constraints)
-    val stagedStats = withPartitionStats(
-      collectStats(spark, root, staged, physSchema(out.schema, m.colMap),
-        mapStatsCols(keepStats, m.colMap), m.partitionBy),
-      staged, m.partitionBy, out.schema)
-    val removedSet = (fullDrop ++ rewrite).toSet
-    val f = fs(spark, new Path(root))
-    publish(spark, root, staged, stagedStats, mode = "replace",
-      schemaJsonOf = () => schema.json, txn = txn) { prevM =>
-      val prevFiles = prevM.map(_.files).getOrElse(Nil)
-      if (!removedSet.subsetOf(prevFiles.toSet) ||
-          dvsChanged(m, prevM, removedSet)) {
-        f.delete(new Path(new Path(root), stageRel), true)
-        throw new CompactionConflictException(
-          s"replaceWhere into $root@v$v raced a commit that removed or " +
-            "re-vectored files it read; rerun against the new snapshot")
-      }
-      val prevStats = prevM.map(_.stats).getOrElse(Map.empty)
-      (prevFiles.filterNot(removedSet) ++ staged,
-        (prevStats -- removedSet) ++ stagedStats)
-    }
+    val (whole, partial) = classify(spark, root, m,
+      filesMayMatch(spark, root, m, predicate), hit)
+    val removed = (whole ++ partial).toSet
+    val rows =
+      if (partial.isEmpty) repl
+      else readFilesLive(spark, root, m, partial).filter(!hit).unionByName(repl)
+    rewrite(spark, root, m, "replace", removed, removed, Some(rows),
+      statsColumns, external = true, txn = txn)
   }
 
   // ---- tags (dataset releases) -------------------------------------------
@@ -3192,8 +3073,7 @@ object VersionedTable {
       version: Option[Long] = None): Long = {
     require(TagName.matches(name),
       s"tag name `$name` must match ${TagName.regex}")
-    val v = version.orElse(latestVersion(spark, root)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root, version)
     val dir = tagsPath(root)
     val fsys = fs(spark, dir)
     if (!fsys.exists(versionFile(root, v)))
@@ -3327,8 +3207,7 @@ object VersionedTable {
     */
   def exportSnapshot(spark: SparkSession, root: String,
       version: Option[Long] = None): (String, Seq[String]) = {
-    val v = version.orElse(latestVersion(spark, root)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
+    val v = pin(spark, root, version)
     val m = manifest(spark, root, v)
     if (m.dvs.nonEmpty) throw new java.io.IOException(
       s"snapshot $root@v$v has outstanding deletion vectors, which " +
@@ -3385,8 +3264,7 @@ object VersionedTable {
     */
   def cloneTable(spark: SparkSession, sourceRoot: String, destRoot: String,
       version: Option[Long] = None, pinSource: Boolean = true): Long = {
-    val v = version.orElse(latestVersion(spark, sourceRoot)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $sourceRoot"))
+    val v = pin(spark, sourceRoot, version)
     val m = manifest(spark, sourceRoot, v)
     if (m.dvs.nonEmpty) throw new java.io.IOException(
       s"snapshot $sourceRoot@v$v has outstanding deletion vectors; " +

@@ -65,7 +65,7 @@ object NoveltyStream {
     * (h, doc_id))` — freshFirst is CHECKPOINTED (it pins the store's
     * pre-batch content; the caller writes it as the batch's store
     * partition and must release it via
-    * [[graft.operators.SimilaritySearch.dropCheckpointBlocks]]).
+    * [[graft.operators.Blocks.drop]]).
     */
   private[streaming] def scoreAgainstStore(
       pre: DataFrame,
@@ -113,8 +113,8 @@ object NoveltyStream {
     // batch-lifetime checkpoints: drop their blocks now, not at
     // stream shutdown — a long-running monitor must not accumulate
     // one batch's worth of blocks per micro-batch
-    graft.operators.SimilaritySearch.dropCheckpointBlocks(freshFirst)
-    graft.operators.SimilaritySearch.dropCheckpointBlocks(pre)
+    graft.operators.Blocks.drop(freshFirst)
+    graft.operators.Blocks.drop(pre)
   }
 
   /** Attach the monitor to a streaming document source. */

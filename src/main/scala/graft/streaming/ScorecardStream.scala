@@ -164,10 +164,10 @@ object ScorecardStream {
       () => fps(rootDir).write(freshFps, batchId),
       () => langs(rootDir).write(langCounts, batchId))
     sums(rootDir).write(partial, batchId)
-    graft.operators.SimilaritySearch.dropCheckpointBlocks(freshFirst)
-    graft.operators.SimilaritySearch.dropCheckpointBlocks(flagged)
-    graft.operators.SimilaritySearch.dropCheckpointBlocks(priorFpSet)
-    graft.operators.SimilaritySearch.dropCheckpointBlocks(slim)
+    graft.operators.Blocks.drop(freshFirst)
+    graft.operators.Blocks.drop(flagged)
+    graft.operators.Blocks.drop(priorFpSet)
+    graft.operators.Blocks.drop(slim)
   }
 
   /** Attach the monitor to a streaming document source. */

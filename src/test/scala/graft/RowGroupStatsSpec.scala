@@ -148,6 +148,33 @@ class RowGroupStatsSpec extends SparkSpec {
       "the range predicate must refute at least one recorded group")
   }
 
+  test("every rewrite of a mapped table writes files that carry maps") {
+    val root = freshRoot()
+    (0 until 4).foreach { k =>
+      VersionedTable.commit((k * 100 until (k + 1) * 100)
+          .map(i => (i.toLong, s"s$i")).toDF("id", "s").coalesce(1),
+        root, statsColumns = Seq("*"), rowGroupStats = true)
+    }
+    def latest = VersionedTable.manifest(spark, root,
+      VersionedTable.latestVersion(spark, root).get)
+    def rewrites(op: String)(run: => Option[Long]): Unit = {
+      val before = latest.files.toSet
+      assert(run.isDefined, s"$op committed nothing")
+      val m = latest
+      val added = m.files.filterNot(before)
+      assert(added.nonEmpty, s"$op wrote no file")
+      added.foreach(rel => assert(m.stats(rel).rgs.nonEmpty,
+        s"$op wrote $rel without row-group maps"))
+    }
+    rewrites("compactWhere")(
+      VersionedTable.compactWhere(spark, root, col("id") < 200L))
+    rewrites("merge")(VersionedTable.merge(spark, root,
+      Seq((5L, "x"), (1000L, "new")).toDF("id", "s"), Seq("id")))
+    rewrites("delete")(
+      VersionedTable.delete(spark, root, col("id") === 250L))
+    rewrites("compactSmall")(VersionedTable.compactSmall(spark, root))
+  }
+
   test("maps survive the manifest render/parse round trip") {
     val fsSt = VersionedTable.FileStats(10L,
       Map("a" -> VersionedTable.ColStats("long", Some("0"), Some("9"), 1L)),

@@ -118,6 +118,24 @@ class VersionedTableConstraintSpec extends SparkSpec {
     assert(got === Map(1L -> 10.0, 2L -> 25.0, 3L -> 30.0, 4L -> -4.0))
   }
 
+  test("a replaceWhere pinned before addConstraint conflicts; nothing commits") {
+    val root = freshRoot()
+    VersionedTable.commit(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "price"),
+      root, statsColumns = Seq("*"))
+    val v1 = VersionedTable.addConstraint(spark, root, "price_pos",
+      "price > 0")
+    // the replacement was checked against v0's (empty) constraint set
+    intercept[VersionedTable.CompactionConflictException] {
+      VersionedTable.replaceWhere(spark, root,
+        Seq((2L, -1.0)).toDF("id", "price"), col("id") === 2L,
+        pinVersion = Some(0L))
+    }
+    assert(VersionedTable.latestVersion(spark, root) === Some(v1))
+    assert(VersionedTable.read(spark, root).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toMap
+      === Map(1L -> 10.0, 2L -> 20.0))
+  }
+
   test("a constraint commit is data-identical to the change feed") {
     val src = freshRoot()
     val dst = freshRoot()

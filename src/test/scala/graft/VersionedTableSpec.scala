@@ -558,6 +558,46 @@ class VersionedTableSpec extends SparkSpec {
     assert(ids(root) === Seq(9L))
   }
 
+  test("every rewrite pinned before a racing overwrite conflicts and leaves no stage") {
+    val ops: Seq[(String, (String, Option[Long]) => Option[Long])] = Seq(
+      "compact" -> ((root, pin) =>
+        VersionedTable.compact(spark, root, pinVersion = pin)),
+      "compactFiles" -> ((root, pin) => VersionedTable.compactFiles(spark,
+        root, VersionedTable.manifest(spark, root, pin.get).files,
+        pinVersion = pin)),
+      "delete" -> ((root, pin) => VersionedTable.delete(spark, root,
+        col("id") === 1L, pinVersion = pin)),
+      "deleteVectored" -> ((root, pin) => VersionedTable.deleteVectored(
+        spark, root, col("id") === 1L, pinVersion = pin)),
+      "merge" -> ((root, pin) => VersionedTable.merge(spark, root,
+        Seq((1L, "m")).toDF("id", "s"), Seq("id"), pinVersion = pin)),
+      "replaceWhere" -> ((root, pin) => VersionedTable.replaceWhere(spark,
+        root, Seq((1L, "r")).toDF("id", "s"), col("id") === 1L,
+        pinVersion = pin)))
+    ops.foreach { case (op, run) =>
+      val root = freshRoot()
+      // two files, the first only partly matching id = 1, so every op
+      // stages something before it publishes
+      VersionedTable.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+        .coalesce(1), root, statsColumns = Seq("*"))
+      VersionedTable.commit(Seq((3L, "c")).toDF("id", "s").coalesce(1),
+        root, statsColumns = Seq("*"))
+      val pinned = VersionedTable.latestVersion(spark, root)
+      VersionedTable.commit(Seq((9L, "i")).toDF("id", "s"), root,
+        overwrite = true)
+      val fs = new Path(root).getFileSystem(
+        spark.sparkContext.hadoopConfiguration)
+      def dataDirs = fs.listStatus(new Path(root, "data"))
+        .map(_.getPath.getName).toSet
+      val dirs = dataDirs
+      withClue(op) {
+        intercept[VersionedTable.CompactionConflictException](run(root, pinned))
+        assert(ids(root) === Seq(9L))
+        assert(dataDirs === dirs, "the conflicting stage was left behind")
+      }
+    }
+  }
+
   test("mergeSchema appends widen the snapshot; missing and new columns read NULL") {
     val root = freshRoot()
     VersionedTable.commit(Seq((1L, "a")).toDF("id", "s").coalesce(1), root,
